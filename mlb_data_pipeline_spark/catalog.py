@@ -614,9 +614,9 @@ def lake_scan(
     if branch is not None:
         if version is not None or as_of_ts is not None:
             raise ValueError("pass branch= or version=/as_of_ts=, not both")
-        from .operators.snapshots import _branch_info, read_branch
+        from .operators.snapshots import read_branch, snapshot_info
 
-        read_info = _branch_info(path, branch)
+        read_info = snapshot_info(path, branch=branch)
         if not predicate:
             return read_branch(spark, path, branch)
         inventory = sorted(read_info["files"])
@@ -786,9 +786,9 @@ def lake_explain(
         # head's file list is the inventory, same rules
         if version is not None:
             raise ValueError("pass branch= or version=, not both")
-        from .operators.snapshots import _branch_info
+        from .operators.snapshots import snapshot_info
 
-        live = sorted(_branch_info(path, branch)["files"])
+        live = sorted(snapshot_info(path, branch=branch)["files"])
     elif version is not None:
         from .operators.snapshots import snapshot_files
 
@@ -816,12 +816,12 @@ def lake_explain(
     # column mapping (round 14): the explainer consults the same
     # physically-keyed stats as the planner — translate identically so
     # the kept-set pin can never drift on a mapped lake
-    from .operators.snapshots import _branch_info as _binfo, _phys_keyed
+    from .operators.snapshots import _phys_keyed, snapshot_info
 
     eph = _lake_phys(
         path,
         version,
-        binfo=_binfo(path, branch) if branch is not None else None,
+        binfo=snapshot_info(path, branch=branch) if branch is not None else None,
     )
     if eph:
         branches = _phys_keyed(branches, eph)
@@ -1168,9 +1168,9 @@ def lake_count(
         # mask-applying reader
         if version is not None:
             raise ValueError("pass branch= or version=, not both")
-        from .operators.snapshots import _branch_info, _read_files, read_branch
+        from .operators.snapshots import _read_files, read_branch, snapshot_info
 
-        binfo = _branch_info(ent["path"], branch)
+        binfo = snapshot_info(ent["path"], branch=branch)
         if not predicate:
             rows = binfo.get("file_rows")
             dvr = binfo.get("dv_rows") or {}
@@ -1408,20 +1408,18 @@ def lake_explain_delete(
     drift from what the delete actually does."""
     ent = _lake_entry(spark, name)
     from .operators.snapshots import (
-        _branch_info,
         _classify_for_delete,
         has_snapshots,
         snapshot_files,
+        snapshot_info,
     )
 
     phys = None
     if branch is not None:
-        binfo = _branch_info(ent["path"], branch)
+        binfo = snapshot_info(ent["path"], branch=branch)
         files = sorted(binfo["files"])
         phys = binfo.get("phys")
     elif has_snapshots(ent["path"]):
-        from .operators.snapshots import snapshot_info
-
         files = snapshot_files(ent["path"])
         phys = snapshot_info(ent["path"]).get("phys")
     else:
@@ -1468,29 +1466,6 @@ def lake_update_where(
         assignments,
         predicate,
         col_types=_lake_col_types(spark, ent),
-        scan_manifest=ent["scan_manifest"],
-        branch=branch,
-    )
-
-
-def lake_merge_into(
-    spark: SparkSession,
-    name: str,
-    source: DataFrame,
-    key: str,
-    when_matched: str = "update",
-    branch: str | None = None,
-) -> dict:
-    """MERGE INTO a registered lake table (see lake_delete_where)."""
-    ent = _lake_entry(spark, name)
-    from .operators.snapshots import lake_merge
-
-    return lake_merge(
-        spark,
-        ent["path"],
-        source,
-        key,
-        when_matched=when_matched,
         scan_manifest=ent["scan_manifest"],
         branch=branch,
     )

@@ -58,6 +58,11 @@ Iceberg/Delta-shaped transaction log on top of the same directory:
   ``lake_branch_create/append``, ``read_branch``,
   ``lake_publish_branch`` (strict fast-forward or append rebase):
   stage a data drop invisible to main, audit it, publish atomically.
+  A REF names a chain of records: main's live in ``_snapshots/``,
+  branch ``<name>``'s in ``_snapshots/branches/<name>/`` with the same
+  record shape (plus ``fork_version``). Every commit function takes
+  ``branch=`` and runs the one protocol on that ref's chain — the ref
+  is the only thing that tells a main commit from a branch commit.
 * **Round 13** — (a) NAME-REUSE GUARDS: dropped columns (and their
   rename-lineage aliases) tombstone in ``dropped_names``; the
   evolution paths reject reusing any tombstoned/lineage name (old
@@ -65,12 +70,12 @@ Iceberg/Delta-shaped transaction log on top of the same directory:
   truncating overwrite resets tombstones/lineage/masks. (b) DV
   commits ship their mask as a DELTA merged into the head actually
   landed on — concurrent DV deletes merge, same-file masks raise.
-  (c) DML ON BRANCHES: ``lake_delete/update/merge(branch=)`` run the
-  pruned classification over the branch head and commit on the
-  branch chain; ``read_changes(branch=)`` is the WAP audit primitive
-  (net "what would publishing change" vs the fork);
-  ``read_branch(version=)`` time travels within staging; the
-  streaming snapshot sink takes ``branch=`` (stage a continuous
+  (c) DML ON BRANCHES: ``lake_delete/update/merge(branch=)`` and the
+  ALTER ops plan against the branch ref's head and commit through the
+  same file-change / schema paths as main; ``read_changes(branch=)``
+  is the WAP audit primitive (net "what would publishing change" vs
+  the fork); ``read_branch(version=)`` time travels within staging;
+  the streaming snapshot sink takes ``branch=`` (stage a continuous
   feed, publish on cadence); publish carries branch DV deltas.
   (d) SHARDED SNAPSHOT MANIFESTS: above ``_MANIFEST_SHARD_THRESHOLD``
   files the commit json stays O(1) — the file list lives in
@@ -175,36 +180,62 @@ def has_snapshots(path: str) -> bool:
     )
 
 
-def _versions(path: str) -> list[int]:
+def _ref_dir(path: str, branch: str | None = None) -> str:
+    """The record directory of a ref: main (``branch=None``) commits
+    under ``_snapshots/``, branch ``<name>`` under
+    ``_snapshots/branches/<name>/``."""
+    if branch is not None:
+        if not re.fullmatch(r"[A-Za-z][A-Za-z0-9_.-]*", branch):
+            raise ValueError(f"invalid branch name {branch!r}")
+        return os.path.join(_snap_dir(path), "branches", branch)
+    return _snap_dir(path)
+
+
+def _ref_label(branch: str | None) -> str:
+    """Error-message prefix naming a branch ref ('' for main)."""
+    return f"branch {branch!r} " if branch else ""
+
+
+def _versions(path: str, branch: str | None = None) -> list[int]:
+    """The ref's committed versions, ascending (branch-local numbers on
+    a branch, where v1 is the fork record)."""
     out = []
-    for n in _store().list(_snap_dir(path)):
+    for n in _store().list(_ref_dir(path, branch)):
         m = re.fullmatch(r"v(\d{12})\.json", n)
         if m:
             out.append(int(m.group(1)))
     return sorted(out)
 
 
-def current_version(path: str) -> int | None:
-    vs = _versions(path)
+def current_version(path: str, branch: str | None = None) -> int | None:
+    vs = _versions(path, branch)
     return vs[-1] if vs else None
 
 
-def snapshot_info(path: str, version: int | str | None = None) -> dict:
+def snapshot_info(
+    path: str, version: int | str | None = None, branch: str | None = None
+) -> dict:
     """The committed snapshot record (version, parent, op, ts, files,
-    summary). ``version=None`` resolves the current head; a string
-    resolves as a TAG name (``lake_tag``) — every reader downstream
-    (snapshot_files, read_snapshot, lake_scan) inherits both forms."""
+    summary) of a ref — main, or branch ``branch``. ``version=None``
+    resolves the ref's head; a string resolves as a main TAG name
+    (``lake_tag``) — every reader downstream (snapshot_files,
+    read_snapshot, lake_scan) inherits both forms."""
     if isinstance(version, str):
         version = resolve_version(path, version)
     if version is None:
-        version = current_version(path)
-        if version is None:
-            raise ValueError(f"no snapshots under {path!r}")
-    fn = os.path.join(_snap_dir(path), f"v{version:012d}.json")
+        vs = _versions(path, branch)
+        if not vs:
+            raise ValueError(
+                f"no branch {branch!r} under {path!r}"
+                if branch
+                else f"no snapshots under {path!r}"
+            )
+        version = vs[-1]
+    fn = os.path.join(_ref_dir(path, branch), f"v{version:012d}.json")
     if not _store().exists(fn):
         raise ValueError(
-            f"snapshot v{version} does not exist under {path!r} "
-            "(expired by vacuum_lake, or never committed)"
+            f"{_ref_label(branch)}snapshot v{version} does not exist under "
+            f"{path!r} (expired by vacuum_lake, or never committed)"
         )
     return _resolve_record(path, json.loads(_store().read(fn)))
 
@@ -331,15 +362,15 @@ def lake_history(path: str) -> list[dict]:
 
 
 def last_stream_batch_id(path: str, branch: str | None = None) -> int | None:
-    """The latest ``summary.batch_id`` on the main chain (or a BRANCH
-    chain) from a NEWEST-FIRST scan of the raw record jsons — the
+    """The latest ``summary.batch_id`` on a ref (main, or ``branch``)
+    from a NEWEST-FIRST scan of the raw record jsons — the
     streaming replay guard's read (round 14, ADVICE r13 #5). Batch ids
     are monotonic, so the newest record carrying one holds the max;
     the scan stops there — O(1) json reads per micro-batch for a live
     stream instead of O(history), and it never resolves sharded
     manifests (only the summary is needed). None when no retained
     record carries a batch id."""
-    d = _branch_dir(path, branch) if branch is not None else _snap_dir(path)
+    d = _ref_dir(path, branch)
     names = sorted(
         (n for n in _store().list(d) if re.fullmatch(r"v\d{12}\.json", n)),
         reverse=True,
@@ -450,15 +481,17 @@ def commit_snapshot(
     dv_files: dict[str, list[str]] | None = None,
     spark: SparkSession | None = None,
     phys: dict[str, str] | None = None,
+    branch: str | None = None,
 ) -> int:
-    """Commit ``files`` as the table's next version. Atomic and
-    single-winner: the record is staged then HARD-LINKED to its final
-    name — link fails with EEXIST if another writer got there first
-    (``SnapshotConflictError``). ``parent`` asserts the version the
-    writer planned against; a mismatch with the current head is the
-    same conflict, detected before any filesystem write. Every public
-    commit path passes ``parent`` (round 12) — a stale plan can never
-    silently build over a concurrent commit.
+    """Commit ``files`` as the next version of a ref — main, or branch
+    ``branch``. Atomic and single-winner: the record is staged then
+    HARD-LINKED to its final name — link fails with EEXIST if another
+    writer got there first (``SnapshotConflictError``). ``parent``
+    asserts the version the writer planned against; a mismatch with
+    the ref's current head is the same conflict, detected before any
+    filesystem write. Every public commit path passes ``parent``
+    (round 12) — a stale plan can never silently build over a
+    concurrent commit.
 
     Every commit also carries ``file_rows`` — per-file row counts,
     inherited from the parent for carried-over files and read from the
@@ -470,23 +503,25 @@ def commit_snapshot(
     ``StructType.json()`` string; inherited from the parent when None,
     so an empty table (delete-all, truncating overwrite) stays
     readable with its true schema even after vacuum removed every
-    dead data file."""
-    head = current_version(path)
+    dead data file. Every other metadata leg inherits the same way
+    (see ``_INHERITED_KEYS``)."""
+    # main's head is read by a one-argument call: tests patch
+    # current_version to pin the exclusive-put race window
+    head = current_version(path, branch) if branch else current_version(path)
     if parent is not None and parent != (head if head is not None else 0):
         raise SnapshotConflictError(
-            f"planned against v{parent} but head is v{head} — re-plan and retry"
+            f"planned against {_ref_label(branch)}v{parent} but head is "
+            f"v{head} — re-plan and retry"
         )
     version = (head or 0) + 1
     prev: dict = {}
     if head is not None:
-        prev = snapshot_info(path, head)
+        prev = snapshot_info(path, head, branch=branch)
     prev_rows: dict[str, int] = prev.get("file_rows", {})
     file_rows: dict[str, int] = {n: prev_rows[n] for n in files if n in prev_rows}
     fresh = [n for n in files if n not in prev_rows]
     if fresh:
         file_rows.update(_file_row_counts(path, fresh, spark))
-    d = _snap_dir(path)
-    os.makedirs(d, exist_ok=True)
     record = {
         "version": version,
         "parent": head,
@@ -495,80 +530,89 @@ def commit_snapshot(
         "summary": summary or {},
     }
     record.update(_files_repr(path, prev, files, file_rows))
-    schema_json = schema_json if schema_json is not None else prev.get("schema")
-    if schema_json is not None:
-        record["schema"] = schema_json
-    # rename lineage (round 12 full schema evolution): {current column
-    # -> [prior names, newest first]} — inherited like the schema so
-    # every later commit keeps resolving pre-rename files
-    renames = renames if renames is not None else prev.get("renames")
-    if renames:
-        record["renames"] = renames
-    # deletion vectors (round 12): "dvs" = relative names of position
-    # sidecars under _snapshots/dv/, "dv_rows" = {file: deleted rows}
-    # — inherited so every later commit keeps masking DV'd positions;
-    # entries for files that left the live set are harmless (their
-    # anti-join matches nothing; row counting sums live files only)
-    dvs = dvs if dvs is not None else prev.get("dvs")
-    if dvs:
-        record["dvs"] = dvs
-    dv_rows = dv_rows if dv_rows is not None else prev.get("dv_rows")
-    if dv_rows:
-        record["dv_rows"] = dv_rows
-    # "dv_files" (round 14): {sidecar name -> [masked file basenames]},
-    # written by the DV commit that created the sidecar. Pure pruning
-    # metadata: a rewrite that removes every file a sidecar masks can
-    # drop the sidecar reference (instead of carrying it forever), so
-    # vacuum reclaims the sidecar once the old versions expire.
-    # Inherited like dvs; sidecars without an entry (pre-round-14
-    # records) are simply retained conservatively.
-    dv_files = dv_files if dv_files is not None else prev.get("dv_files")
-    if dv_files:
-        record["dv_files"] = dv_files
-    # dropped-name tombstones (round 13): column names retired by
-    # lake_drop_column (plus their rename-lineage aliases). Old files
-    # still carry the bytes under these names, so REUSING one would
-    # resurface dropped data — the evolution paths reject any new
-    # column name found here. Inherited like the schema; an overwrite
-    # clears them (all files are the commit's own).
-    dropped_names = (
-        dropped_names if dropped_names is not None else prev.get("dropped_names")
-    )
-    if dropped_names:
-        record["dropped_names"] = sorted(set(dropped_names))
-    # column mapping (round 14 — the Delta column-mapping / Iceberg
-    # column-ID shape): "phys" = {logical column -> PHYSICAL parquet
-    # column name}, sparse (absent = identity). Lets a dropped or
-    # renamed-away name be legitimately REUSED: the new column stores
-    # under a fresh physical name, so old files' dead bytes can never
-    # resurface through it. Inherited like the schema; a truncating
-    # overwrite resets it (every live file is the commit's own).
-    phys = phys if phys is not None else prev.get("phys")
-    if phys:
-        record["phys"] = phys
-    final = os.path.join(d, f"v{version:012d}.json")
+    given = {
+        "schema": schema_json,
+        "renames": renames,
+        "dvs": dvs,
+        "dv_rows": dv_rows,
+        "dv_files": dv_files,
+        "dropped_names": dropped_names,
+        "phys": phys,
+    }
+    for k in _INHERITED_KEYS:
+        v = given.get(k)
+        v = v if v is not None else prev.get(k)
+        if v:
+            record[k] = sorted(set(v)) if k == "dropped_names" else v
+    return _put_record(path, branch, record)
+
+
+# Metadata legs every commit inherits from its parent unless the
+# committer passes a value (an EMPTY value blocks inheritance — a
+# truncating overwrite or a rollback resets the leg):
+#
+# * "fork_version" — the main version a branch forked from (branch
+#   records only; never passed, always inherited).
+# * "schema", "renames" (round 12 full schema evolution) — the
+#   authoritative read schema and {current column -> [prior names,
+#   newest first]}, so every later commit keeps resolving pre-rename
+#   files.
+# * "dvs", "dv_rows" (round 12 deletion vectors) — relative names of
+#   position sidecars under _snapshots/dv/ and {file: deleted rows};
+#   entries for files that left the live set are harmless (their
+#   anti-join matches nothing; row counting sums live files only).
+# * "dv_files" (round 14) — {sidecar name -> [masked file basenames]},
+#   written by the DV commit that created the sidecar. Pure pruning
+#   metadata: a rewrite that removes every file a sidecar masks can
+#   drop the sidecar reference, so vacuum reclaims the sidecar once
+#   the old versions expire. Sidecars without an entry (pre-round-14
+#   records) are simply retained conservatively.
+# * "dropped_names" (round 13) — column names retired by
+#   lake_drop_column (plus their rename-lineage aliases). Old files
+#   still carry the bytes under these names, so REUSING one would
+#   resurface dropped data — the evolution paths allocate a fresh
+#   physical name for any new column found here.
+# * "phys" (round 14 — the Delta column-mapping / Iceberg column-ID
+#   shape) — {logical column -> PHYSICAL parquet column name}, sparse
+#   (absent = identity). Lets a dropped or renamed-away name be
+#   legitimately reused: the new column stores under a fresh physical
+#   name, so old files' dead bytes can never resurface through it.
+_INHERITED_KEYS = (
+    "fork_version",
+    "schema",
+    "renames",
+    "dvs",
+    "dv_rows",
+    "dv_files",
+    "dropped_names",
+    "phys",
+)
+
+
+def _put_record(path: str, branch: str | None, record: dict) -> int:
+    """Exclusive create of a ref's record through the log-store seam:
+    exactly one winner per version on any backend (POSIX hard-link
+    here, conditional put on object storage — operators/logstore.py)."""
+    final = os.path.join(_ref_dir(path, branch), f"v{record['version']:012d}.json")
     try:
-        # exclusive create through the log-store seam: exactly one
-        # winner per version on any backend (POSIX hard-link here,
-        # conditional put on object storage — operators/logstore.py)
         _store().put_exclusive(final, json.dumps(record).encode())
     except FileExistsError as exc:
         raise SnapshotConflictError(
-            f"v{version} was committed concurrently — re-plan and retry"
+            f"{_ref_label(branch)}v{record['version']} was committed "
+            "concurrently — re-plan and retry"
         ) from exc
-    return version
+    return record["version"]
 
 
-def _head_and_live(path: str) -> tuple[int, list[str]]:
-    """(head version, its live file list) read consistently: the file
-    list comes from the SAME version the head read resolved, so a
-    commit landing between the two calls cannot tear the pair. Head 0
-    = no snapshots yet (live = whatever plain parquet is on disk,
-    the adoption inventory)."""
-    head = current_version(path)
-    if head is None:
-        return 0, _data_files(path)
-    return head, snapshot_files(path, head)
+def _head_record(path: str, branch: str | None = None) -> dict:
+    """The ref's head record, read ONCE so its version, live files and
+    metadata all come from the same commit (a commit landing between
+    separate reads cannot tear them). Main with no snapshots yet is
+    version 0 whose live set is whatever plain parquet is on disk (the
+    adoption inventory); a missing branch raises."""
+    if branch is not None or _versions(path):
+        return snapshot_info(path, branch=branch)
+    return {"version": 0, "files": _data_files(path)}
 
 
 # bounded optimistic retries for the conflict-resolving commit paths —
@@ -586,13 +630,14 @@ def _commit_append(
     spark: SparkSession | None = None,
     phys: dict[str, str] | None = None,
     require_meta: dict | None = None,
+    branch: str | None = None,
 ) -> int:
-    """Commit an APPEND: files = head's live set ∪ ``new_files``. A
-    blind append never logically conflicts with a concurrent commit
-    (it reads no existing file), so a ``SnapshotConflictError`` here
-    just means the head moved — re-read it and re-union (Delta treats
-    appends the same way). Bounded retries; the final conflict
-    propagates.
+    """Commit an APPEND on a ref: files = head's live set ∪
+    ``new_files``. A blind append never logically conflicts with a
+    concurrent commit (it reads no existing file), so a
+    ``SnapshotConflictError`` here just means the head moved — re-read
+    it and re-union (Delta treats appends the same way). Bounded
+    retries; the final conflict propagates.
 
     ``require_meta`` (round 14): an EVOLVING append computed its
     ``schema_json``/``phys`` against a specific head's evolution state
@@ -603,13 +648,13 @@ def _commit_append(
     — the caller re-plans, same contract as the DDL paths' parent
     assertion)."""
     for attempt in range(_COMMIT_RETRIES + 1):
-        head, live = _head_and_live(path)
+        head_info = _head_record(path, branch)
+        head = head_info["version"]
         if require_meta is not None and head:
-            cur = snapshot_info(path, head)
             stale = {
                 k
                 for k, v in require_meta.items()
-                if (cur.get(k) or None) != (v or None)
+                if (head_info.get(k) or None) != (v or None)
             }
             if stale:
                 raise SnapshotConflictError(
@@ -620,13 +665,14 @@ def _commit_append(
         try:
             return commit_snapshot(
                 path,
-                sorted(set(live) | set(new_files)),
+                sorted(set(head_info["files"]) | set(new_files)),
                 op,
                 summary=summary,
                 parent=head,
                 schema_json=schema_json,
                 spark=spark,
                 phys=phys,
+                branch=branch,
             )
         except SnapshotConflictError:
             if attempt == _COMMIT_RETRIES:
@@ -652,8 +698,9 @@ def _commit_filechange(
     dropped_names: list[str] | None = None,
     require_schema: str | None = None,
     phys: dict[str, str] | None = None,
+    branch: str | None = None,
 ) -> int:
-    """Commit a DML/OPTIMIZE-shaped change planned against
+    """Commit a DML/OPTIMIZE-shaped change on a ref, planned against
     ``planned_head``: drop ``removed`` from the live set, add
     ``added``. On a head-moved conflict, REBASE file-level (the Delta
     conflict-resolution shape): if every removed file is still live in
@@ -693,12 +740,14 @@ def _commit_filechange(
     (``dv_files``) are all dead are dropped too — a rewrite that
     materializes masks stops referencing them, so vacuum can reclaim
     the sidecars once older versions expire, instead of the metadata
-    bloating monotonically."""
+    bloating monotonically. On a branch this keeps a compaction's
+    phantom deltas out of what publish later ships to main."""
     expect = planned_head
     plan_dvr_lazy = planned_dv_rows
+    ref = _ref_label(branch)
     for attempt in range(_COMMIT_RETRIES + 1):
-        head, live = _head_and_live(path)
-        head_info = snapshot_info(path, head) if head else {}
+        head_info = _head_record(path, branch)
+        head, live = head_info["version"], head_info["files"]
         if require_schema is not None and head_info.get("schema") != require_schema:
             # the caller is COMMITTING schema metadata computed against
             # a specific base schema (an evolved branch publishing):
@@ -714,14 +763,14 @@ def _commit_filechange(
             gone = removed - live_set
             if gone:
                 raise SnapshotConflictError(
-                    f"planned against v{expect} but head is v{head}, and a "
+                    f"planned against {ref}v{expect} but head is v{head}, and a "
                     f"concurrent commit touched {len(gone)} file(s) this plan "
                     f"read (e.g. {sorted(gone)[0]!r}) — re-plan and retry"
                 )
             collide = added & live_set
             if collide:
                 raise SnapshotConflictError(
-                    f"new file name(s) already live at v{head} "
+                    f"new file name(s) already live at {ref}v{head} "
                     f"(e.g. {sorted(collide)[0]!r}) — re-plan and retry"
                 )
             if removed:
@@ -733,7 +782,10 @@ def _commit_filechange(
                 if plan_dvr_lazy is None:
                     try:
                         plan_dvr_lazy = (
-                            snapshot_info(path, planned_head).get("dv_rows") or {}
+                            snapshot_info(path, planned_head, branch=branch).get(
+                                "dv_rows"
+                            )
+                            or {}
                             if planned_head
                             else {}
                         )
@@ -742,7 +794,7 @@ def _commit_filechange(
                         # the masks this plan read can't be verified —
                         # refuse, never silently rebase
                         raise SnapshotConflictError(
-                            f"planned against v{expect} but head is v{head}, "
+                            f"planned against {ref}v{expect} but head is v{head}, "
                             "and the planned head's record is no longer "
                             "readable — cannot verify its deletion-vector "
                             "state; re-plan and retry"
@@ -751,7 +803,7 @@ def _commit_filechange(
                     b = os.path.basename(rel)
                     if int(head_dvr.get(b, 0)) != int(plan_dvr_lazy.get(b, 0)):
                         raise SnapshotConflictError(
-                            f"planned against v{expect} but head is v{head}, "
+                            f"planned against {ref}v{expect} but head is v{head}, "
                             f"and a concurrent deletion vector masks {rel!r}, "
                             "which this plan read unmasked and is rewriting — "
                             "the rewrite would resurrect the concurrently "
@@ -765,7 +817,7 @@ def _commit_filechange(
                         continue  # this commit's own new file carries the mask
                     if rel not in live_set:
                         raise SnapshotConflictError(
-                            f"planned against v{expect} but head is v{head}, and a "
+                            f"planned against {ref}v{expect} but head is v{head}, and a "
                             f"concurrent commit rewrote or dropped masked file "
                             f"{rel!r} — this deletion vector no longer applies; "
                             "re-plan and retry"
@@ -773,7 +825,7 @@ def _commit_filechange(
                     b = os.path.basename(rel)
                     if int(head_dvr.get(b, 0)) != int(plan_dvr.get(b, 0)):
                         raise SnapshotConflictError(
-                            f"planned against v{expect} but head is v{head}, and a "
+                            f"planned against {ref}v{expect} but head is v{head}, and a "
                             f"concurrent deletion vector masks {rel!r} too — "
                             "positions may overlap; re-plan and retry"
                         )
@@ -824,6 +876,7 @@ def _commit_filechange(
                 renames=renames,
                 dropped_names=dropped_names,
                 phys=phys,
+                branch=branch,
             )
         except SnapshotConflictError:
             if attempt == _COMMIT_RETRIES:
@@ -898,8 +951,8 @@ def lake_write(
     physical column — rejected)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
-    head, live = _head_and_live(path)
-    head_info = snapshot_info(path, head) if head else {}
+    head_info = _head_record(path)
+    head, live = head_info["version"], head_info["files"]
     evolved_schema_json: str | None = None
     evolved_phys: dict[str, str] | None = None
     if live and mode == "append":
@@ -1012,12 +1065,11 @@ def lake_write(
         # becomes legal again (round 13).
         version = None
         for attempt in range(_COMMIT_RETRIES + 1):
-            h, _ = _head_and_live(path)
             try:
                 version = commit_snapshot(
                     path, new, "overwrite",
                     summary={"files_added": len(new)},
-                    parent=h, schema_json=schema_json,
+                    parent=current_version(path) or 0, schema_json=schema_json,
                     renames={}, dvs=[], dv_rows={}, dropped_names=[],
                     phys={}, spark=spark,
                 )
@@ -1051,7 +1103,13 @@ def read_snapshot(
     """The table AS OF ``version`` (current head when None) — reads
     exactly the committed file list, so the result is stable no matter
     how many commits happened since."""
-    info = snapshot_info(path, version)
+    return _read_record(spark, path, snapshot_info(path, version))
+
+
+def _read_record(
+    spark: SparkSession, path: str, info: dict, branch: str | None = None
+) -> DataFrame:
+    """The rows of one committed record of a ref (main or ``branch``)."""
     files = sorted(info["files"])
     if not files:
         # empty table: the commit record carries the authoritative
@@ -1068,9 +1126,9 @@ def read_snapshot(
     missing = [n for n in files if not os.path.exists(os.path.join(path, n))]
     if missing:
         raise ValueError(
-            f"snapshot v{version if version is not None else current_version(path)} "
-            f"references {len(missing)} vacuumed file(s) (e.g. {missing[0]!r}) — "
-            "expired versions cannot be read"
+            f"{_ref_label(branch)}snapshot v{info['version']} references "
+            f"{len(missing)} missing file(s) (e.g. {missing[0]!r}) — "
+            "vacuumed versions cannot be read"
         )
     return _read_files(spark, path, files, info)
 
@@ -1249,24 +1307,18 @@ _WIDEN_OK = {
 def _schema_commit(
     path: str, op: str, mutate, summary: dict, branch: str | None = None
 ) -> int:
-    """Shared tail of the ALTER ops: read the head's recorded schema +
-    rename lineage + dropped-name tombstones, apply ``mutate(schema,
-    renames, dropped) -> (schema, renames, dropped)``, commit the SAME
-    file list with the new metadata (parent-asserted — a concurrent
-    commit raises, the caller re-decides). ``branch`` (round 13 — DDL
-    ON BRANCHES): the ALTER lands on the branch chain; main never sees
-    it until publish, which carries the evolved schema forward when
-    main's own schema never moved (and raises when both evolved)."""
+    """Shared tail of the ALTER ops: read the ref's head recorded
+    schema + rename lineage + dropped-name tombstones, apply
+    ``mutate(schema, renames, dropped) -> (schema, renames, dropped)``,
+    commit the SAME file list with the new metadata (parent-asserted —
+    a concurrent commit raises, the caller re-decides). ``branch``
+    (round 13 — DDL ON BRANCHES): the ALTER lands on the branch ref;
+    main never sees it until publish, which carries the evolved schema
+    forward when main's own schema never moved (and raises when both
+    evolved)."""
     from pyspark.sql.types import StructType
 
-    if branch is not None:
-        info = _branch_info(path, branch)
-        head = info["version"]
-    else:
-        head = current_version(path)
-        if head is None:
-            raise ValueError(f"{path!r} is not a snapshot lake (no commits)")
-        info = snapshot_info(path, head)
+    info = snapshot_info(path, branch=branch)
     sj = info.get("schema")
     if not sj:
         raise ValueError(
@@ -1279,36 +1331,18 @@ def _schema_commit(
     phys = dict(info.get("phys") or {})
     schema, renames, dropped, phys = mutate(schema, renames, dropped, phys)
     if branch is not None:
-        record = {
-            **{k: info[k] for k in ("fork_version",) if k in info},
-            "version": head + 1,
-            "parent": head,
-            "op": op,
-            "ts": time.time(),
-            **_files_repr(path, info, info["files"], info.get("file_rows", {})),
-            "summary": {"branch": branch, **summary},
-            "schema": schema.json(),
-        }
-        if renames:
-            record["renames"] = renames
-        if dropped:
-            record["dropped_names"] = sorted(set(dropped))
-        if phys:
-            record["phys"] = phys
-        for k in ("dvs", "dv_rows"):
-            if info.get(k):
-                record[k] = info[k]
-        return _branch_commit(path, branch, record)
+        summary = {"branch": branch, **summary}
     return commit_snapshot(
         path,
         info["files"],
         op,
         summary=summary,
-        parent=head,
+        parent=info["version"],
         schema_json=schema.json(),
         renames=renames,
         dropped_names=dropped,
         phys=phys,
+        branch=branch,
     )
 
 
@@ -1521,21 +1555,24 @@ def vacuum_lake(
             set(retained)
             | {v for v in vs if snapshot_info(path, v)["ts"] >= cutoff_ts}
         )
+    # ONE pass over every record of every ref. Retained main versions
+    # and every branch version pin their data files, deletion-vector
+    # sidecars and sharded manifests — live branches are retention
+    # promises like tags, until dropped or published (round 12);
+    # expired main versions only mark their files as once-committed
+    # (dead, not orphans)
     referenced: set[str] = set()
     ever_referenced: set[str] = set()
-    for v in vs:
-        fset = set(snapshot_files(path, v))
+    dv_referenced: set[str] = set()
+    man_referenced: set[str] = set()
+    for branch, v in _ref_versions(path, vs):
+        info = snapshot_info(path, v, branch=branch)
+        fset = set(info["files"])
         ever_referenced |= fset
-        if v in retained:
+        if branch is not None or v in retained:
             referenced |= fset
-    # live branches are retention promises like tags: every file any
-    # branch version references stays until the branch is dropped or
-    # published (round 12)
-    for name in lake_branches(path):
-        for bv in _branch_versions(path, name):
-            bset = set(_branch_info(path, name, bv)["files"])
-            referenced |= bset
-            ever_referenced |= bset
+            dv_referenced.update(info.get("dvs") or [])
+            man_referenced.update(info.get("manifest_refs") or [])
     removed = 0
     kept_orphans = 0
     cutoff = time.time() - orphan_grace_s
@@ -1560,12 +1597,6 @@ def vacuum_lake(
     dv_dir = os.path.join(_snap_dir(path), "dv")
     dv_removed = 0
     if os.path.isdir(dv_dir):
-        dv_referenced: set[str] = set()
-        for v in retained:
-            dv_referenced |= set(snapshot_info(path, v).get("dvs") or [])
-        for name in lake_branches(path):
-            for bv in _branch_versions(path, name):
-                dv_referenced |= set(_branch_info(path, name, bv).get("dvs") or [])
         for n in _store().list(dv_dir):
             if n not in dv_referenced:
                 try:
@@ -1580,14 +1611,6 @@ def vacuum_lake(
     man_dir = _manifest_dir(path)
     man_removed = 0
     if os.path.isdir(man_dir):
-        man_referenced: set[str] = set()
-        for v in retained:
-            man_referenced |= set(snapshot_info(path, v).get("manifest_refs") or [])
-        for name in lake_branches(path):
-            for bv in _branch_versions(path, name):
-                man_referenced |= set(
-                    _branch_info(path, name, bv).get("manifest_refs") or []
-                )
         for n in _store().list(man_dir):
             if n in man_referenced:
                 continue
@@ -1845,31 +1868,13 @@ def lake_delete(
     and audited BEFORE publish, instead of published-then-fixed. Main
     never sees the intermediate states; publish carries the branch's
     file changes (and DV deltas) through the usual protocol."""
-    if branch is None:
-        if not has_snapshots(path):
-            # adopt: first DML on a plain parquet dir commits v1 = as-is
-            commit_snapshot(path, _data_files(path), "adopt", parent=0)
-        head = current_version(path)
-        head_info = snapshot_info(path, head)
-    else:
-        head_info = _branch_info(path, branch)
-        head = head_info["version"]
+    head_info = _dml_head(path, branch)
+    head = head_info["version"]
     live = sorted(head_info["files"])
     drop, keep, rewrite = _classify_for_delete(
         path, predicate, col_types, spark, scan_manifest, files=live,
         phys=head_info.get("phys"),
     )
-
-    def _commit(removed, added, op, summary, **dvkw):
-        if branch is None:
-            return _commit_filechange(
-                path, head, removed=removed, added=added, op=op,
-                summary=summary, spark=spark, **dvkw
-            )
-        return _branch_commit_filechange(
-            path, branch, head, removed=removed, added=added, op=op,
-            summary=summary, spark=spark, **dvkw
-        )
     prev_rows = head_info.get("file_rows", {})
     prev_dv_rows = head_info.get("dv_rows", {})
     # dropped files count their LIVE rows (physical minus already-DV'd)
@@ -1909,11 +1914,13 @@ def lake_delete(
             n for n in rewrite if os.path.basename(n) in dv_per_file
         }
         n_kept = len(keep) + len(rewrite) - len(dv_per_file)
-        version = _commit(
-            set(drop),
-            set(),
-            "delete",
-            {
+        version = _commit_filechange(
+            path,
+            head,
+            removed=set(drop),
+            added=set(),
+            op="delete",
+            summary={
                 "predicate": predicate,
                 "files_dropped": len(drop),
                 "files_kept": n_kept,
@@ -1925,9 +1932,10 @@ def lake_delete(
             masked_files=masked,
             planned_dv_rows=prev_dv_rows,
             dv_files_add={s: sorted(dv_per_file) for s in new_sidecars},
+            spark=spark,
+            branch=branch,
         )
-        if branch is None:
-            _maintain_manifest(spark, path, scan_manifest)
+        _maintain_manifest(spark, path, scan_manifest, branch)
         return {
             "version": version,
             "files_dropped": len(drop),
@@ -1959,20 +1967,23 @@ def lake_delete(
         rows_deleted += before - (after_df.count() if after_df is not None else 0)
     # rows_dropped was computed above from the parent commit's metadata
     # (never the files' bytes — they were classified unopened)
-    version = _commit(
-        set(drop) | set(rewrite),
-        set(new_files),
-        "delete",
-        {
+    version = _commit_filechange(
+        path,
+        head,
+        removed=set(drop) | set(rewrite),
+        added=set(new_files),
+        op="delete",
+        summary={
             "predicate": predicate,
             "files_dropped": len(drop),
             "files_kept": len(keep),
             "files_rewritten": len(rewrite),
             "rows_deleted": rows_deleted + rows_dropped,
         },
+        spark=spark,
+        branch=branch,
     )
-    if branch is None:
-        _maintain_manifest(spark, path, scan_manifest)
+    _maintain_manifest(spark, path, scan_manifest, branch)
     return {
         "version": version,
         "files_dropped": len(drop),
@@ -2011,23 +2022,15 @@ def lake_merge(
     guess)."""
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
-    if branch is None:
-        if not has_snapshots(path):
-            commit_snapshot(path, _data_files(path), "adopt", parent=0)
-        head, live = _head_and_live(path)
-        head_info = snapshot_info(path, head)
-    else:
-        head_info = _branch_info(path, branch)
-        head, live = head_info["version"], sorted(head_info["files"])
+    head_info = _dml_head(path, branch)
+    head, live = head_info["version"], sorted(head_info["files"])
     # the CURRENT snapshot's merged schema — a whole-dir read could
     # adopt a dead pre-evolution footer's column set and false-flag
     # schema drift after an evolution commit
     lake_schema = set(
         _read_files(spark, path, live, head_info).columns
         if live
-        else read_snapshot(spark, path).columns
-        if branch is None
-        else read_branch(spark, path, branch).columns
+        else _read_record(spark, path, head_info, branch).columns
     )
     if when_matched == "update" and set(source.columns) != lake_schema:
         raise ValueError(
@@ -2105,17 +2108,11 @@ def lake_merge(
         "files_candidates": len(candidates),
         "files_untouched": len(untouched),
     }
-    if branch is None:
-        version = _commit_filechange(
-            path, head, removed=set(candidates), added=set(new_files),
-            op="merge", summary=summary, spark=spark,
-        )
-        _maintain_manifest(spark, path, scan_manifest)
-    else:
-        version = _branch_commit_filechange(
-            path, branch, head, removed=set(candidates),
-            added=set(new_files), op="merge", summary=summary, spark=spark,
-        )
+    version = _commit_filechange(
+        path, head, removed=set(candidates), added=set(new_files),
+        op="merge", summary=summary, spark=spark, branch=branch,
+    )
+    _maintain_manifest(spark, path, scan_manifest, branch)
     return {
         "version": version,
         "files_candidates": len(candidates),
@@ -2153,17 +2150,13 @@ def read_changes(
     would publishing this branch change" — staged appends as inserts,
     in-branch deletes (rewrite or DV form) as deletes — computable
     without touching main and at churn cost."""
-    if branch is not None:
-        bvs = _branch_versions(path, branch)
-        if not bvs:
-            raise ValueError(f"no branch {branch!r} under {path!r}")
-        info_from = _branch_info(path, branch, v_from if v_from is not None else bvs[0])
-        info_to = _branch_info(path, branch, v_to if v_to is not None else bvs[-1])
-        return _read_changes_infos(spark, path, info_from, info_to)
+    info_to = snapshot_info(path, v_to, branch=branch)
     if v_from is None:
-        raise ValueError("v_from is required for main-chain read_changes")
+        if not branch:
+            raise ValueError("v_from is required for main-chain read_changes")
+        v_from = _FORK_VERSION
     return _read_changes_infos(
-        spark, path, snapshot_info(path, v_from), snapshot_info(path, v_to)
+        spark, path, snapshot_info(path, v_from, branch=branch), info_to
     )
 
 
@@ -2322,13 +2315,12 @@ def lake_stats(path: str) -> dict:
     references — what ``vacuum_lake`` would delete)."""
     info = snapshot_info(path)
     live = set(info["files"])
+    vs = _versions(path)
+    # one pass over every ref: branch-staged files are referenced debt,
+    # not vacuum debt
     referenced: set[str] = set()
-    for v in _versions(path):
-        referenced |= set(snapshot_info(path, v)["files"])
-    # branch-staged files are referenced debt, not vacuum debt
-    for name in lake_branches(path):
-        for bv in _branch_versions(path, name):
-            referenced |= set(_branch_info(path, name, bv)["files"])
+    for branch, v in _ref_versions(path, vs):
+        referenced |= set(snapshot_info(path, v, branch=branch)["files"])
     on_disk = set(_all_data_files(path))
     dead = on_disk - live
 
@@ -2339,7 +2331,6 @@ def lake_stats(path: str) -> dict:
             if os.path.exists(os.path.join(path, n))
         )
 
-    vs = _versions(path)
     return {
         "version": info["version"],
         "versions_retained": len(vs),
@@ -2353,13 +2344,25 @@ def lake_stats(path: str) -> dict:
     }
 
 
-def _maintain_manifest(spark: SparkSession, path: str, scan_manifest: str | None) -> None:
+def _dml_head(path: str, branch: str | None) -> dict:
+    """The head record a DML op plans against on its ref. The first
+    DML on a plain parquet directory adopts it: main v1 = the files
+    as-is."""
+    if not branch and not has_snapshots(path):
+        commit_snapshot(path, _data_files(path), "adopt", parent=0)
+    return snapshot_info(path, branch=branch)
+
+
+def _maintain_manifest(
+    spark: SparkSession, path: str, scan_manifest: str | None, branch: str | None
+) -> None:
     """In-call scan-manifest maintenance for the DML ops (mirrors
     optimize_clustered's round-11 leg): GC rows whose files left the
     live set, then stat the files the op wrote — O(changed files).
     Columns come from the manifest itself (its distinct ``col`` set),
-    so callers pass only the path."""
-    if scan_manifest is None:
+    so callers pass only the path. The registered manifest tracks
+    MAIN's live set, so a commit on a branch leaves it alone."""
+    if scan_manifest is None or branch:
         return
     from .layout import append_scan_manifest, compact_scan_manifest
 
@@ -2392,15 +2395,9 @@ def lake_update(
     naturally (the rewrite writes through partitionBy).
 
     ``branch`` (round 13): apply the update on a WAP branch's head —
-    same pruning, committed on the branch chain (see lake_delete)."""
-    if branch is None:
-        if not has_snapshots(path):
-            commit_snapshot(path, _data_files(path), "adopt", parent=0)
-        head = current_version(path)
-        head_info = snapshot_info(path, head)
-    else:
-        head_info = _branch_info(path, branch)
-        head = head_info["version"]
+    same pruning, committed on the branch ref (see lake_delete)."""
+    head_info = _dml_head(path, branch)
+    head = head_info["version"]
     allmatch, keep, boundary = _classify_for_delete(
         path, predicate, col_types, spark, scan_manifest,
         files=sorted(head_info["files"]),
@@ -2428,17 +2425,11 @@ def lake_update(
         "files_untouched": len(keep),
         "files_rewritten": len(to_rewrite),
     }
-    if branch is None:
-        version = _commit_filechange(
-            path, head, removed=set(to_rewrite), added=set(new_files),
-            op="update", summary=summary, spark=spark,
-        )
-        _maintain_manifest(spark, path, scan_manifest)
-    else:
-        version = _branch_commit_filechange(
-            path, branch, head, removed=set(to_rewrite),
-            added=set(new_files), op="update", summary=summary, spark=spark,
-        )
+    version = _commit_filechange(
+        path, head, removed=set(to_rewrite), added=set(new_files),
+        op="update", summary=summary, spark=spark, branch=branch,
+    )
+    _maintain_manifest(spark, path, scan_manifest, branch)
     return {
         "version": version,
         "files_untouched": len(keep),
@@ -2482,25 +2473,35 @@ def lake_untag(path: str, name: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Branch refs — WRITE-AUDIT-PUBLISH (round 12). A branch is a named
-# side chain of snapshot records under ``_snapshots/branches/<name>/``,
-# forked from a main version: staged data lands on the branch as
-# ordinary invisible-then-committed files, audit queries read the
-# branch head without main ever seeing a staged row, and PUBLISH
-# fast-forwards main to the branch head in ONE parent-asserted commit
-# — the Iceberg/Nessie WAP pattern, which is exactly how a training-
-# data lake takes a new crawl drop: stage on a branch, run the quality
-# gates, publish atomically or drop the branch. Branch commits share
-# the main chain's record shape (files, file_rows, schema, renames),
-# so ``_read_files`` reads branch heads with the same authority rules.
+# Branch refs — WRITE-AUDIT-PUBLISH (round 12). A branch is a named ref
+# whose records live under ``_snapshots/branches/<name>/``, forked from
+# a main version: staged data lands on the branch as ordinary
+# invisible-then-committed files, audit queries read the branch head
+# without main ever seeing a staged row, and PUBLISH fast-forwards main
+# to the branch head in ONE parent-asserted commit — the Iceberg/Nessie
+# WAP pattern, which is exactly how a training-data lake takes a new
+# crawl drop: stage on a branch, run the quality gates, publish
+# atomically or drop the branch. There is no separate branch commit
+# protocol: a branch record has main's record shape plus the inherited
+# ``fork_version``, and every commit (``commit_snapshot``,
+# ``_commit_append``, ``_commit_filechange``) and read
+# (``snapshot_info``, ``_read_files``) runs on it with ``branch=``.
 # ``vacuum_lake`` treats every branch-referenced file as retained.
 # ---------------------------------------------------------------------------
 
+# branch-local v1 is always the fork record: ``lake_branch_create``
+# writes it, and branch records only ever go away with the whole branch
+_FORK_VERSION = 1
 
-def _branch_dir(path: str, name: str) -> str:
-    if not re.fullmatch(r"[A-Za-z][A-Za-z0-9_.-]*", name):
-        raise ValueError(f"invalid branch name {name!r}")
-    return os.path.join(_snap_dir(path), "branches", name)
+
+def _ref_versions(path: str, main_versions: list[int]) -> list[tuple]:
+    """(branch, version) for every record of every ref: the caller's
+    listing of main (so a commit landing mid-scan cannot slip between
+    its retention decision and this pass), then each branch's."""
+    out: list[tuple] = [(None, v) for v in main_versions]
+    for name in sorted(_store().list(os.path.join(_snap_dir(path), "branches"))):
+        out += [(name, bv) for bv in _versions(path, name)]
+    return out
 
 
 def lake_branches(path: str) -> dict[str, dict]:
@@ -2508,10 +2509,10 @@ def lake_branches(path: str) -> dict[str, dict]:
     d = os.path.join(_snap_dir(path), "branches")
     out: dict[str, dict] = {}
     for name in sorted(_store().list(d)):
-        vs = _branch_versions(path, name)
+        vs = _versions(path, name)
         if not vs:
             continue
-        info = _branch_info(path, name, vs[-1])
+        info = snapshot_info(path, vs[-1], branch=name)
         out[name] = {
             "head": vs[-1],
             "fork_version": info.get("fork_version"),
@@ -2520,216 +2521,30 @@ def lake_branches(path: str) -> dict[str, dict]:
     return out
 
 
-def _branch_versions(path: str, name: str) -> list[int]:
-    out = []
-    for n in _store().list(_branch_dir(path, name)):
-        m = re.fullmatch(r"v(\d{12})\.json", n)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _branch_info(path: str, name: str, bv: int | None = None) -> dict:
-    vs = _branch_versions(path, name)
-    if not vs:
-        raise ValueError(f"no branch {name!r} under {path!r}")
-    bv = vs[-1] if bv is None else bv
-    fn = os.path.join(_branch_dir(path, name), f"v{bv:012d}.json")
-    if not _store().exists(fn):
-        raise ValueError(f"branch {name!r} has no version {bv}")
-    # branch records shard exactly like main's (X47): forking a
-    # million-file table copies manifest REFS, not a file list
-    return _resolve_record(path, json.loads(_store().read(fn)))
-
-
-def _branch_commit(path: str, name: str, record: dict) -> int:
-    """Exclusive-link a branch record — same single-winner rule as the
-    main chain, scoped to the branch's own version numbers."""
-    final = os.path.join(_branch_dir(path, name), f"v{record['version']:012d}.json")
-    try:
-        _store().put_exclusive(final, json.dumps(record).encode())
-    except FileExistsError as exc:
-        raise SnapshotConflictError(
-            f"branch {name!r} v{record['version']} was committed concurrently"
-        ) from exc
-    return record["version"]
-
-
-def _branch_commit_filechange(
-    path: str,
-    name: str,
-    planned_bv: int,
-    removed: set[str],
-    added: set[str],
-    op: str,
-    summary: dict | None = None,
-    dv_add: list[str] | None = None,
-    dv_rows_add: dict[str, int] | None = None,
-    masked_files: set[str] | None = None,
-    planned_dv_rows: dict[str, int] | None = None,
-    dv_files_add: dict[str, list[str]] | None = None,
-    spark: SparkSession | None = None,
-) -> int:
-    """``_commit_filechange`` scoped to a BRANCH chain (round 13 —
-    DML on branches): drop ``removed`` from the branch head's live
-    set, add ``added``, with the same optimistic rebase rules — a
-    concurrent branch commit that touched a file this plan read is a
-    real conflict; a disjoint one replays. DV deltas merge into the
-    branch head actually committed on, identically to the main-chain
-    protocol. Branch records keep carrying fork_version / schema /
-    lineage / tombstones so publish and audit reads stay authoritative.
-    Round 14: the main chain's symmetric removed-files DV guard and
-    mask-metadata pruning apply identically (see _commit_filechange) —
-    a branch rewrite rebasing over a concurrent branch DV commit that
-    masked one of its removed files would otherwise resurrect the
-    masked rows in staging and publish the corruption to main."""
-    new_rows = _file_row_counts(path, sorted(added), spark)
-    has_dv = dv_add is not None or bool(dv_rows_add)
-    expect = planned_bv
-    plan_dvr_lazy = planned_dv_rows
-    for attempt in range(_COMMIT_RETRIES + 1):
-        head_info = _branch_info(path, name)
-        bv = head_info["version"]
-        live = head_info["files"]
-        live_set = set(live)
-        if bv != expect:
-            gone = removed - live_set
-            if gone:
-                raise SnapshotConflictError(
-                    f"planned against branch {name!r} v{expect} but head is "
-                    f"v{bv}, and a concurrent commit touched {len(gone)} "
-                    f"file(s) this plan read (e.g. {sorted(gone)[0]!r})"
-                )
-            collide = added & live_set
-            if collide:
-                raise SnapshotConflictError(
-                    f"new file name(s) already live on branch {name!r} "
-                    f"(e.g. {sorted(collide)[0]!r})"
-                )
-            if removed:
-                # symmetric DV guard (round 14, mirrors the main
-                # chain): a concurrent branch DV commit masking a file
-                # this rewrite read unmasked would resurrect the
-                # masked rows in staging
-                head_dvr = head_info.get("dv_rows") or {}
-                if plan_dvr_lazy is None:
-                    plan_dvr_lazy = (
-                        _branch_info(path, name, planned_bv).get("dv_rows") or {}
-                    )
-                for rel in sorted(removed):
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr_lazy.get(b, 0)):
-                        raise SnapshotConflictError(
-                            f"a concurrent deletion vector on branch {name!r} "
-                            f"masks {rel!r}, which this plan read unmasked and "
-                            "is rewriting — the rewrite would resurrect the "
-                            "concurrently deleted rows; re-plan and retry"
-                        )
-            if has_dv:
-                head_dvr = head_info.get("dv_rows") or {}
-                plan_dvr = planned_dv_rows or {}
-                for rel in sorted(masked_files or ()):
-                    if rel in added:
-                        continue
-                    if rel not in live_set:
-                        raise SnapshotConflictError(
-                            f"a concurrent branch commit rewrote or dropped "
-                            f"masked file {rel!r} — re-plan and retry"
-                        )
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr.get(b, 0)):
-                        raise SnapshotConflictError(
-                            f"a concurrent deletion vector masks {rel!r} too "
-                            "— positions may overlap; re-plan and retry"
-                        )
-            expect = bv
-        files = sorted((live_set - removed) | added)
-        prev_rows = head_info.get("file_rows", {})
-        stale = [n for n in files if n not in prev_rows and n not in new_rows]
-        if stale:
-            new_rows.update(_file_row_counts(path, stale, spark))
-        record = {
-            **{k: head_info[k] for k in ("fork_version",) if k in head_info},
-            "version": bv + 1,
-            "parent": bv,
-            "op": op,
-            "ts": time.time(),
-            **_files_repr(
-                path,
-                head_info,
-                files,
-                {n: prev_rows.get(n, new_rows.get(n)) for n in files},
-            ),
-            "summary": summary or {},
-        }
-        for k in ("schema", "renames", "dropped_names", "phys"):
-            if head_info.get(k):
-                record[k] = head_info[k]
-        if has_dv:
-            head_dvs = list(head_info.get("dvs") or [])
-            dvs = head_dvs + [s for s in (dv_add or []) if s not in head_dvs]
-            dv_rows = dict(head_info.get("dv_rows") or {})
-            for b, n in (dv_rows_add or {}).items():
-                dv_rows[b] = int(dv_rows.get(b, 0)) + int(n)
-            dv_files = {**(head_info.get("dv_files") or {}), **(dv_files_add or {})}
-        else:
-            dvs = list(head_info.get("dvs") or [])
-            dv_rows = dict(head_info.get("dv_rows") or {})
-            dv_files = dict(head_info.get("dv_files") or {})
-        if removed and dv_rows:
-            # prune mask metadata for rewritten-away files (round 14,
-            # mirrors _commit_filechange) — without this a branch
-            # compaction's phantom deltas would publish into main's
-            # dv_rows and pin dead sidecars in vacuum forever
-            live_base = {os.path.basename(n) for n in files}
-            dv_rows = {b: n for b, n in dv_rows.items() if b in live_base}
-            if not dv_rows:
-                dvs, dv_files = [], {}
-            else:
-                dvs = [
-                    s
-                    for s in dvs
-                    if s not in dv_files or any(b in live_base for b in dv_files[s])
-                ]
-                dv_files = {s: bs for s, bs in dv_files.items() if s in dvs}
-        if dvs:
-            record["dvs"] = dvs
-        if dv_rows:
-            record["dv_rows"] = dv_rows
-        if dv_files:
-            record["dv_files"] = dv_files
-        try:
-            return _branch_commit(path, name, record)
-        except SnapshotConflictError:
-            if attempt == _COMMIT_RETRIES:
-                raise
-    raise AssertionError("unreachable")
-
-
 def lake_branch_create(path: str, name: str, from_version: int | str | None = None) -> int:
     """Fork a branch at a main version (head when None): one metadata
     record copying the fork's file list / schema / lineage. Staged
     work lands on the branch; main never sees it until publish."""
-    if _branch_versions(path, name):
+    if _versions(path, name):
         raise ValueError(f"branch {name!r} already exists")
     info = snapshot_info(path, from_version)
     record = {
-        "version": 1,
+        "version": _FORK_VERSION,
         "parent": None,
         "op": "branch_fork",
         "ts": time.time(),
         "summary": {"branch": name},
-        "fork_version": info["version"],
     }
     # a sharded main fork copies manifest REFS verbatim (zero manifest
     # writes, zero file-list bytes); a plain main embeds the list
     record.update(
         _files_repr(path, info, info["files"], info.get("file_rows", {}))
     )
-    for k in ("schema", "renames", "dvs", "dv_rows", "dv_files", "dropped_names", "phys"):
+    for k in _INHERITED_KEYS:
         if info.get(k):
             record[k] = info[k]
-    _branch_commit(path, name, record)
+    record["fork_version"] = info["version"]
+    _put_record(path, name, record)
     return info["version"]
 
 
@@ -2739,7 +2554,7 @@ def lake_branch_append(spark: SparkSession, path: str, name: str, df: DataFrame)
     them), then one branch commit flips them live on this branch only.
     Schema must match the branch head's (staging is not the place for
     silent drift)."""
-    head_info = _branch_info(path, name)
+    head_info = snapshot_info(path, branch=name)
     # read one committed branch file set's schema authority
     cur_cols = None
     if head_info.get("schema"):
@@ -2756,46 +2571,11 @@ def lake_branch_append(spark: SparkSession, path: str, name: str, df: DataFrame)
             f"extra / {sorted(cur_cols - set(df.columns)) or '-'} missing"
         )
     new = _write_new_files(df, path, _partition_cols(head_info["files"]), info=head_info)
-    return _branch_commit_append(path, name, new, spark=spark)
-
-
-def _branch_commit_append(
-    path: str,
-    name: str,
-    new: list[str],
-    summary: dict | None = None,
-    op: str = "branch_append",
-    spark: SparkSession | None = None,
-) -> int:
-    """Commit already-staged files as a branch APPEND: files = branch
-    head's live set ∪ ``new``, with the blind-append re-union retry
-    the main chain uses (a branch append reads no existing file, so a
-    moved branch head is never a logical conflict). Shared by
-    ``lake_branch_append`` and the branch leg of the streaming
-    snapshot sink (round 13)."""
-    file_rows_new = _file_row_counts(path, new, spark)
-    for attempt in range(_COMMIT_RETRIES + 1):
-        head_info = _branch_info(path, name)
-        files = sorted(set(head_info["files"]) | set(new))
-        rows = {**file_rows_new, **head_info.get("file_rows", {})}
-        record = {
-            **{k: head_info[k] for k in ("fork_version",) if k in head_info},
-            "version": head_info["version"] + 1,
-            "parent": head_info["version"],
-            "op": op,
-            "ts": time.time(),
-            **_files_repr(path, head_info, files, rows),
-            "summary": {"branch": name, "files_added": len(new), **(summary or {})},
-        }
-        for k in ("schema", "renames", "dvs", "dv_rows", "dv_files", "dropped_names", "phys"):
-            if head_info.get(k):
-                record[k] = head_info[k]
-        try:
-            return _branch_commit(path, name, record)
-        except SnapshotConflictError:
-            if attempt == _COMMIT_RETRIES:
-                raise
-    raise AssertionError("unreachable")
+    return _commit_append(
+        path, new, "branch_append",
+        summary={"branch": name, "files_added": len(new)},
+        spark=spark, branch=name,
+    )
 
 
 def read_branch(
@@ -2805,21 +2585,7 @@ def read_branch(
     commits NOT (the audit read of write-audit-publish). ``version``
     (round 13): a branch-local version for time travel WITHIN the
     staging history (v1 = the fork state)."""
-    info = _branch_info(path, name, version)
-    files = sorted(info["files"])
-    if not files:
-        if info.get("schema"):
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame([], StructType.fromJson(json.loads(info["schema"])))
-        return spark.read.parquet(path).limit(0)
-    missing = [n for n in files if not os.path.exists(os.path.join(path, n))]
-    if missing:
-        raise ValueError(
-            f"branch {name!r} references {len(missing)} missing file(s) "
-            f"(e.g. {missing[0]!r})"
-        )
-    return _read_files(spark, path, files, info)
+    return _read_record(spark, path, snapshot_info(path, version, branch=name), name)
 
 
 def lake_publish_branch(
@@ -2867,7 +2633,7 @@ def lake_publish_branch(
     guard survives the branch being dropped and re-forked)."""
     # pin the branch head FIRST: everything below — gate, diff, DV
     # delta, schema carry, drop — derives from this one record
-    info = _branch_info(path, name)
+    info = snapshot_info(path, branch=name)
     head_bv = info["version"]
     if expect_zero:
         if spark is None:
@@ -2898,8 +2664,7 @@ def lake_publish_branch(
     # chain's record for that version may have been vacuum-expired
     # (round 13, ADVICE r12 #2), and a routine vacuum must never make
     # a live, auditable branch unpublishable
-    bvs = _branch_versions(path, name)
-    fork_info = _branch_info(path, name, bvs[0]) if bvs else {}
+    fork_info = snapshot_info(path, _FORK_VERSION, branch=name)
     fork_files = set(fork_info.get("files") or [])
     branch_files = set(info["files"])
     removed = fork_files - branch_files
@@ -2982,13 +2747,13 @@ def lake_branch_compact(
     Selection is METADATA-ONLY (the branch record's own file_rows);
     the rewrite reads through ``_read_files`` with the branch record,
     so deletion-vector masks MATERIALIZE and schema lineage resolves —
-    exactly like main-chain DML rewrites. Commits through the branch
-    file-change protocol (a concurrent branch commit that touched a
-    selected file raises). Fork-shared files are compacted like any
+    exactly like main-chain DML rewrites. Commits through
+    ``_commit_filechange`` on the branch ref (a concurrent branch
+    commit that touched a selected file raises). Fork-shared files are compacted like any
     other: the rewrite drops them from the branch's live set, and
     publish removes them from main through the usual removed/added
     diff."""
-    head_info = _branch_info(path, name)
+    head_info = snapshot_info(path, branch=name)
     bv = head_info["version"]
     rows = head_info.get("file_rows", {})
     small = sorted(
@@ -3000,15 +2765,15 @@ def lake_branch_compact(
     k = n_files if n_files is not None else max(1, total // max(min_rows, 1))
     src = _read_files(spark, path, small, head_info)
     new = _write_new_files(src.coalesce(k), path, _partition_cols(small), info=head_info)
-    version = _branch_commit_filechange(
+    version = _commit_filechange(
         path,
-        name,
         bv,
         removed=set(small),
         added=set(new),
         op="branch_compact",
         summary={"files_compacted": len(small), "files_written": len(new)},
         spark=spark,
+        branch=name,
     )
     return {
         "files_compacted": len(small),
@@ -3034,11 +2799,11 @@ def lake_branch_drop(
     the branch history). The branch survives; the error names the
     published main version (``published``) so the caller knows the
     publish itself landed."""
-    d = _branch_dir(path, name)
+    d = _ref_dir(path, name)
     if not _store().list(d):
         raise ValueError(f"no branch {name!r} under {path!r}")
     if expect_version is not None:
-        vs = _branch_versions(path, name)
+        vs = _versions(path, name)
         if vs and vs[-1] > expect_version:
             raise SnapshotConflictError(
                 f"branch {name!r} received commit(s) after the audited head "

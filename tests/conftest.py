@@ -49,6 +49,9 @@ def pytest_configure(config):
         "markers",
         "slow: multi-minute sweep; skipped unless SPARK_GRAFT_FULL_TESTS=1",
     )
+    config.addinivalue_line(
+        "markers", "streaming: Structured Streaming jobs (tests/test_streaming.py)"
+    )
 
 
 def pytest_collection_modifyitems(config, items):

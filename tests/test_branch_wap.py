@@ -239,22 +239,19 @@ def test_branch_dml_conflict_on_concurrent_branch_commit(spark, tmp_path):
     """Two writers on the SAME branch: a delete planned against a
     stale branch head whose file a concurrent branch commit rewrote
     must raise, not silently drop the concurrent change."""
-    from mlb_data_pipeline_spark.operators.snapshots import (
-        _branch_commit_filechange,
-        _branch_info,
-    )
+    from mlb_data_pipeline_spark.operators.snapshots import _commit_filechange
 
     lake = str(tmp_path / "lake")
     lake_write(spark, _kv(spark, 0, 200, "base").repartitionByRange(2, "k"), lake)
     lake_branch_create(lake, "wap")
-    planned = _branch_info(lake, "wap")
+    planned = snapshot_info(lake, branch="wap")
     victim = planned["files"][0]
     # concurrent branch delete rewrites/drops that same file
     lake_delete(spark, lake, "k BETWEEN 0 AND 99", col_types=_CT, branch="wap")
     with pytest.raises(SnapshotConflictError, match="touched"):
-        _branch_commit_filechange(
-            lake, "wap", planned["version"], removed={victim}, added=set(),
-            op="delete",
+        _commit_filechange(
+            lake, planned["version"], removed={victim}, added=set(),
+            op="delete", branch="wap",
         )
 
 
@@ -379,10 +376,7 @@ def test_branch_compact_small_files(spark, tmp_path):
     """Round 13: small-file compaction ON the branch — streaming
     batches coalesce in staging (metadata-selected, masks
     materialized), so publish ships compact files, not fragmentation."""
-    from mlb_data_pipeline_spark.operators.snapshots import (
-        _branch_info,
-        lake_branch_compact,
-    )
+    from mlb_data_pipeline_spark.operators.snapshots import lake_branch_compact
 
     lake = str(tmp_path / "lake")
     lake_write(spark, _kv(spark, 0, 10000, "base").coalesce(1), lake)  # 1 big file
@@ -394,10 +388,10 @@ def test_branch_compact_small_files(spark, tmp_path):
         spark, lake, "k BETWEEN 10000 AND 10049",
         col_types={"k": "bigint", "v": "bigint"}, use_dv=True, branch="feed",
     )
-    n_before = len(_branch_info(lake, "feed")["files"])
+    n_before = len(snapshot_info(lake, branch="feed")["files"])
     rep = lake_branch_compact(spark, lake, "feed", min_rows=1000, n_files=1)
     assert rep["files_compacted"] == 5 and rep["files_written"] == 1
-    info = _branch_info(lake, "feed")
+    info = snapshot_info(lake, branch="feed")
     assert len(info["files"]) == n_before - 4  # 5 -> 1
     br = read_branch(spark, lake, "feed")
     assert br.count() == 10450  # masks materialized, not double-applied

@@ -220,6 +220,16 @@ def test_dv_masks_carry_onto_branches(spark, tmp_path):
     cur = read_snapshot(spark, lake)
     assert cur.count() == 250
     assert cur.filter("k % 3 = 0 AND k < 300").count() == 0
+    # an ALTER on a branch keeps the branch's sidecar -> masked-files
+    # map, so a later rewrite can still prune the sidecar for vacuum
+    lake_branch_create(lake, "c")
+    lake_delete(
+        spark, lake, "k = 1001", col_types={"k": "bigint"}, use_dv=True, branch="c"
+    )
+    dv_files = snapshot_info(lake, branch="c").get("dv_files")
+    assert dv_files
+    lake_rename_column(lake, "v", "w", branch="c")
+    assert snapshot_info(lake, branch="c").get("dv_files") == dv_files
 
 
 def test_dv_mask_aware_metadata_count_fast_path(spark, tmp_path):

@@ -179,15 +179,16 @@ def test_branch_rewrite_rebase_over_concurrent_branch_dv_conflicts(spark, tmp_pa
     lake_branch_append(
         spark, lake, "wap", _kv(spark, 100, 200, "staged").coalesce(1)
     )  # bv2
-    binfo = S._branch_info(lake, "wap")
-    staged = set(binfo["files"]) - set(S._branch_info(lake, "wap", 1)["files"])
+    binfo = snapshot_info(lake, branch="wap")
+    staged = set(binfo["files"]) - set(snapshot_info(lake, 1, branch="wap")["files"])
     # concurrent branch writer: DV delete masking the staged file (bv3)
     lake_delete(
         spark, lake, "k = 150", col_types={"k": "bigint"}, use_dv=True, branch="wap"
     )
     with pytest.raises(SnapshotConflictError, match="resurrect"):
-        S._branch_commit_filechange(
-            lake, "wap", 2, removed=staged, added=set(), op="update", spark=spark
+        S._commit_filechange(
+            lake, 2, removed=staged, added=set(), op="update", spark=spark,
+            branch="wap",
         )
     # branch state intact: mask still applies
     assert read_branch(spark, lake, "wap").count() == 109
@@ -257,7 +258,7 @@ def test_branch_compact_publish_carries_no_phantom_masks(spark, tmp_path):
         col_types={"k": "bigint"}, use_dv=True, branch="feed",
     )
     lake_branch_compact(spark, lake, "feed", min_rows=500, n_files=1)
-    binfo = S._branch_info(lake, "feed")
+    binfo = snapshot_info(lake, branch="feed")
     assert not binfo.get("dv_rows") and not binfo.get("dvs")  # pruned in staging
     lake_publish_branch(lake, "feed")
     head = snapshot_info(lake)
