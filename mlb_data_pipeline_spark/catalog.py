@@ -60,7 +60,9 @@ def table_row_count(sf_dir: str, name: str) -> int:
 
     path = table_path(sf_dir, name)
     if os.path.isdir(path):
-        entries = sorted(os.listdir(path))
+        # hidden/metadata entries (_SUCCESS, _temporary/, .crc) are not
+        # data, exactly as spark.read.parquet skips them
+        entries = sorted(e for e in os.listdir(path) if not e.startswith(("_", ".")))
         # fail LOUDLY on layouts this flat walk cannot count (ADVICE
         # r14): spark.read.parquet recurses into partition
         # subdirectories, so silently skipping them (or an empty match)
@@ -155,22 +157,30 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # probes FROM the predicate itself and routes the read through
 # ``pruned_read`` with no caller opt-in, then applies the exact
 # predicate on top (pruning stays a superset guarantee, so an
-# unparseable conjunct only costs skipping, never rows). This is the
+# unrecognized conjunct only costs skipping, never rows). This is the
 # Python-side analogue of a Catalyst data-skipping rule: the table
-# registration is the "catalog", the predicate→box extraction is the
-# planning hook.
+# registration is the "catalog", the predicate walk is the planning
+# hook.
 #
-# Supported conjunct shapes (the same fragments a row-group pruner
-# handles): ``col BETWEEN a AND b``, ``col >= a``, ``col > a``,
-# ``col <= b``, ``col < b``, ``col = v`` (numeric -> box point; quoted
-# string -> Bloom probe when a Bloom manifest is registered for the
-# column), ``col IN (v1, v2, ...)`` (strings -> Bloom IN-list).
+# The predicate is parsed ONCE by Spark's own parser — the one
+# ``df.filter(predicate)`` uses — and one walk over the returned tree
+# derives every skip clause, so pruning and filtering can never
+# disagree about what a predicate means (quoting, escapes and keywords
+# inside literals are the parser's business). A top-level ``Or`` chain
+# gives the branches (pruned with the UNION of per-branch keep sets),
+# ``And`` gives the conjuncts. Recognized conjuncts (the fragments a
+# row-group pruner handles): ``col BETWEEN a AND b``, ``col >= a``,
+# ``col > a``, ``col <= b``, ``col < b``, ``col = v`` (numeric -> box
+# point; string -> Bloom probe when a Bloom manifest is registered for
+# the column), ``col IN (v1, ...)``, ``col IS [NOT] NULL`` and ``NOT
+# col = v`` (what ``!=``/``<>`` parse to; partition values only).
 # Date/timestamp literals (bare ISO strings or ``DATE '...'`` /
 # ``TIMESTAMP '...'``) fold to the SAME epoch units the scan manifest
 # stores (epoch days / epoch seconds, layout._stat_num) when the lake
-# schema says the column is temporal. Top-level ``OR`` prunes with the
-# UNION of per-branch skip decisions (round 11); ``NOT`` still bails to
-# must-read-everything. Anything else contributes no skip clause.
+# schema says the column is temporal. Every other node — an ``Or`` or
+# other ``Not`` under ``And``, functions, casts, NULL literals,
+# multi-part names — contributes no skip clause (the file must be
+# read); a branch with no clause at all disables pruning.
 # ---------------------------------------------------------------------------
 
 _LAKE_TABLES: dict[tuple[str, str], dict] = {}
@@ -202,39 +212,6 @@ def register_lake_table(
     }
 
 
-_NUM = r"-?\d+(?:\.\d+)?"
-_STR = r"'(?:[^']*)'"
-# a literal may carry a DATE/TIMESTAMP type keyword prefix
-_LIT = rf"(?:(?i:DATE|TIMESTAMP)\s+)?(?:{_NUM}|{_STR})"
-_COL = r"[A-Za-z_][A-Za-z0-9_]*"
-
-
-def _scrub(predicate: str) -> str:
-    """Blank string-literal CONTENTS with a same-length '#' filler.
-    Keyword detection, separator location, and every unanchored scan
-    run on the scrubbed text so they can never see inside literals —
-    and because the scrub preserves LENGTH, any scrubbed offset maps
-    1:1 onto the original, so conjunct text (with its literals intact)
-    is recovered by slicing the original at scrubbed-located spans.
-    (Round 11 fix: the old code split conjuncts on the RAW text, so a
-    literal containing two ANDs minted a fake conjunct that unsoundly
-    pruned files.)"""
-    import re
-
-    return re.sub(_STR, lambda m: "'" + "#" * (len(m.group(0)) - 2) + "'", predicate)
-
-
-def _parse_lit(tok: str):
-    tok = tok.strip()
-    if tok[:4].upper() == "DATE" and not tok[4:5].isalnum() and tok[4:5] != "_":
-        tok = tok[4:].strip()
-    elif tok[:9].upper() == "TIMESTAMP" and not tok[9:10].isalnum() and tok[9:10] != "_":
-        tok = tok[9:].strip()
-    if tok.startswith("'"):
-        return tok[1:-1]
-    return float(tok) if "." in tok else int(tok)
-
-
 def _temporal_num(col: str, val, col_types: dict | None):
     """Fold an ISO date/timestamp string literal on a temporal column
     to the SAME epoch units the scan manifest stores (layout._stat_num:
@@ -260,51 +237,103 @@ def _temporal_num(col: str, val, col_types: dict | None):
     return None
 
 
-def _split_top(orig: str, scrub: str, word: str) -> list[tuple[str, str]]:
-    """Split both texts at depth-0 occurrences of keyword ``word``
-    (located on the scrubbed twin, so literals and parenthesized
-    subtrees are never severed). Returns (orig_frag, scrub_frag)
-    pairs — equal length in, equal offsets out."""
-    import re
-
-    parts: list[tuple[str, str]] = []
-    last = depth = 0
-    for m in re.finditer(rf"(?i)\b{word}\b|[()]", scrub):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            parts.append((orig[last : m.start()], scrub[last : m.start()]))
-            last = m.end()
-    parts.append((orig[last:], scrub[last:]))
-    return parts
+# Spark comparison node class -> the operator it applies
+_CMP = {
+    "EqualTo": "=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+}
+_NUMERIC_TYPES = frozenset({"byte", "short", "integer", "long", "float", "double"})
 
 
-def _unwrap2(orig: str, scrub: str) -> tuple[str, str]:
-    """Strip BALANCED outer parens from the pair, deciding balance on
-    the scrubbed twin (a ')' inside a string literal must not break the
-    scan). The scrub preserves every char outside literal interiors, so
-    identical strips keep the texts aligned."""
-    orig, scrub = orig.strip(), scrub.strip()
-    while scrub.startswith("(") and scrub.endswith(")"):
-        depth = 0
-        ok = True
-        for ch in scrub[1:-1]:
-            depth += {"(": 1, ")": -1}.get(ch, 0)
-            if depth < 0:
-                ok = False
-                break
-        if not ok:
-            break
-        orig, scrub = orig[1:-1].strip(), scrub[1:-1].strip()
-    return orig, scrub
+def _parse_tree(spark: SparkSession, predicate: str) -> tuple:
+    """``predicate`` parsed by the parser ``df.filter(predicate)`` uses,
+    as a (class, fields, children) tree. ``toJSON`` returns the
+    pre-order node list; each node's ``num-children`` rebuilds the
+    nesting. An unparseable predicate raises Spark's ParseException
+    here, as the filter itself would."""
+    import json
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    nodes = iter(json.loads(parser.parseExpression(predicate).toJSON()))
+
+    def build() -> tuple:
+        n = next(nodes)
+        return n["class"].rsplit(".", 1)[-1], n, [build() for _ in range(n["num-children"])]
+
+    return build()
 
 
-def _extract_conjuncts(
-    orig: str, scrub: str, col_types: dict | None
-) -> tuple[dict, dict, dict, dict]:
+def _flatten(node: tuple, cls: str) -> list[tuple]:
+    """The operands of a nested ``cls`` chain (``And`` / ``Or``)."""
+    if node[0] != cls:
+        return [node]
+    return [x for kid in node[2] for x in _flatten(kid, cls)]
+
+
+def _col(node: tuple) -> str | None:
+    """The name of a one-part column reference; None for anything else
+    (multi-part names such as ``s.f`` included)."""
+    if node[0] != "UnresolvedAttribute":
+        return None
+    name = node[1]["nameParts"][1:-1]  # the Seq renders as "[a, b]"
+    return None if ", " in name else name
+
+
+def _lit(node: tuple):
+    """A literal's value: int/float for numeric types, str for string,
+    date and timestamp (temporal values keep their ISO text for
+    ``_temporal_num``); None for NULL and every other type."""
+    if node[0] != "Literal" or node[1]["value"] is None:
+        return None
+    v, t = node[1]["value"], node[1]["dataType"]
+    if t in ("string", "date", "timestamp"):
+        return v
+    if t in _NUMERIC_TYPES or t.startswith("decimal"):
+        try:
+            return int(v)
+        except ValueError:
+            return float(v)
+    return None
+
+
+def _atom(node: tuple) -> tuple | None:
+    """One conjunct as (op, col, value) — op is a comparison, ``!=``,
+    ``IN``/``BETWEEN`` (value: the literal list) or ``null``/``notnull``
+    — or None for a shape no pruning rule handles: an ``Or`` or other
+    ``Not`` under ``And``, functions, casts, NULL literals, column-on-
+    the-right comparisons, multi-part names."""
+    cls, fields, kids = node
+    if cls in ("IsNull", "IsNotNull"):
+        col = _col(kids[0])
+        return ("null" if cls == "IsNull" else "notnull", col, None) if col else None
+    if cls == "Not" and kids[0][0] == "EqualTo":  # also what != and <> parse to
+        a = _atom(kids[0])
+        return ("!=", a[1], a[2]) if a else None
+    if cls in _CMP:
+        col, v = _col(kids[0]), _lit(kids[1])
+        return (_CMP[cls], col, v) if col and v is not None else None
+    between = (
+        cls == "UnresolvedFunction"
+        and fields["nameParts"].lower() == "[between]"
+        and len(kids) == 3
+    )
+    if cls == "In" or between:
+        col, vals = _col(kids[0]), [_lit(k) for k in kids[1:]]
+        if col and None not in vals:
+            return ("BETWEEN" if between else "IN", col, vals)
+    return None
+
+
+def _fold(box: dict, col: str, lo, hi) -> None:
+    cur = box.setdefault(col, [-_INF, _INF])
+    cur[0] = max(cur[0], lo)
+    cur[1] = min(cur[1], hi)
+
+
+def _skip_clauses(atoms: list, col_types: dict | None) -> tuple[dict, dict, dict, dict]:
     """(box, equals, nots, nullness) from one conjunctive branch. box:
     {col: (lo, hi)} with +-inf open ends (folded per column); equals:
     {col: scalar-or-list} for equality / IN (Bloom probes); nots: {col:
@@ -314,179 +343,199 @@ def _extract_conjuncts(
     NULL`` — prunable from the manifest's per-file null counts
     (``IS NULL`` skips null-free files, ``IS NOT NULL`` skips all-null
     files) and from partition values (directory-encoded => non-null).
-    Unmatched conjuncts contribute no skip clause (must-read on that
-    aspect)."""
-    import re
-
+    Unrecognized conjuncts (None atoms) contribute no skip clause
+    (must-read on that aspect)."""
+    ct = col_types or {}
     box: dict[str, list[float]] = {}
     equals: dict[str, object] = {}
     nots: dict[str, list] = {}
     nullness: dict[str, str] = {}
 
-    def fold(col: str, lo, hi) -> None:
-        cur = box.setdefault(col, [-_INF, _INF])
-        cur[0] = max(cur[0], lo)
-        cur[1] = min(cur[1], hi)
-
-    def bound(col: str, lit):
+    def bound(col: str, v):
         # numeric literal -> itself; temporal string -> epoch units;
         # other strings -> None (no box contribution)
-        if not isinstance(lit, str):
-            return lit
-        return _temporal_num(col, lit, col_types)
+        return _temporal_num(col, v, col_types) if isinstance(v, str) else v
 
-    def integral(col: str) -> bool:
-        # strict bounds tighten by one WHOLE unit only when the column
-        # provably takes integer values (dates fold to whole epoch
-        # days) — on a double column, x < 5 admits 4.5, so the box
-        # must keep the widened inclusive bound
-        return (col_types or {}).get(col) in _INTEGRAL_TYPES
-
-    # BETWEEN first, located on the scrubbed text (the AND split below
-    # would sever it at BETWEEN's own AND); literal tokens recovered
-    # from the original by span so date strings survive the scrub.
-    # DEPTH-0 MATCHES ONLY: this branch is conjunctive at its top level
-    # (any depth-0 OR was split off by _or_leaves), but a BETWEEN inside
-    # parentheses can sit under a nested OR — e.g.
-    # ``k >= 0 AND (k IS NOT NULL OR k BETWEEN 0 AND 0)`` — where
-    # folding it as a conjunct is unsound (it silently intersected the
-    # box with [0, 0]). Parenthesized whole-conjunct BETWEENs are
-    # handled soundly by the fullmatch arm in the loop below instead.
-    depth_at = []
-    d = 0
-    for ch in scrub:
-        depth_at.append(d)
-        d += {"(": 1, ")": -1}.get(ch, 0)
-    for m in re.finditer(
-        rf"({_COL})\s+(?i:BETWEEN)\s+({_LIT})\s+(?i:AND)\s+({_LIT})", scrub
-    ):
-        if depth_at[m.start()] != 0:
-            continue
-        col = m.group(1)
-        lo = bound(col, _parse_lit(orig[m.start(2) : m.end(2)]))
-        hi = bound(col, _parse_lit(orig[m.start(3) : m.end(3)]))
-        if lo is not None and hi is not None:
-            fold(col, lo, hi)
-
-    for conj_o, conj_s in _split_top(orig, scrub, "AND"):
-        c, cs = _unwrap2(conj_o, conj_s)
-        # a parenthesized BETWEEN conjunct — ``(k BETWEEN 1 AND 2)`` —
-        # survives the AND split whole (its AND is inside parens) but
-        # the depth-gated pre-pass above skipped it; fullmatch makes it
-        # provably THE conjunct, so folding is sound here
-        m = re.fullmatch(rf"({_COL})\s+(?i:BETWEEN)\s+({_LIT})\s+(?i:AND)\s+({_LIT})", cs)
-        if m:
-            col = m.group(1)
-            lo = bound(col, _parse_lit(c[m.start(2) : m.end(2)]))
-            hi = bound(col, _parse_lit(c[m.start(3) : m.end(3)]))
-            if lo is not None and hi is not None:
-                fold(col, lo, hi)
-            continue
-        m = re.fullmatch(rf"({_COL})\s+(?i:IS)(\s+(?i:NOT))?\s+(?i:NULL)", c)
-        if m:
-            col, kind = m.group(1), "notnull" if m.group(2) else "null"
-            if nullness.get(col, kind) != kind:
+    for op, col, v in filter(None, atoms):
+        if op in ("null", "notnull"):
+            if nullness.get(col, op) != op:
                 # col IS NULL AND col IS NOT NULL: contradictory — no
                 # sound single verdict, contribute nothing (must-read)
                 nullness.pop(col, None)
             else:
-                nullness[col] = kind
-            continue
-        m = re.fullmatch(rf"({_COL})\s*(!=|<>)\s*({_LIT})", c)
-        if m:
-            nots.setdefault(m.group(1), []).append(_parse_lit(m.group(3)))
-            continue
-        m = re.fullmatch(rf"({_COL})\s*(>=|>|<=|<|=|==)\s*({_LIT})", c)
-        if m:
-            col, op, lit = m.group(1), m.group(2), _parse_lit(m.group(3))
-            if op in ("=", "=="):
-                # equality skips BOTH ways: a box point for the min/max
-                # manifest (numeric or temporal-folded) AND a Bloom
-                # probe if one is registered for the column
-                equals[col] = lit
-                b = bound(col, lit)
-                if b is not None:
-                    fold(col, b, b)
+                nullness[col] = op
+        elif op == "!=":
+            nots.setdefault(col, []).append(v)
+        elif op == "BETWEEN":
+            lo, hi = bound(col, v[0]), bound(col, v[1])
+            if lo is not None and hi is not None:
+                _fold(box, col, lo, hi)
+        elif op == "IN":
+            equals[col] = v
+            nums = [bound(col, x) for x in v]
+            if None not in nums:
+                _fold(box, col, min(nums), max(nums))
+        elif op == "=":
+            # equality skips BOTH ways: a box point for the min/max
+            # manifest (numeric or temporal-folded) AND a Bloom probe
+            # if one is registered for the column
+            equals[col] = v
+            b = bound(col, v)
+            if b is not None:
+                _fold(box, col, b, b)
+        elif (b := bound(col, v)) is not None:
+            # strict ops on integral columns tighten exactly by one
+            # unit (col < '1997-05-01' excludes the May 1 file);
+            # otherwise they widen to inclusive bounds — pruning is a
+            # superset guarantee, so widening is always sound
+            exact1 = ct.get(col) in _INTEGRAL_TYPES and float(b).is_integer()
+            if op == ">":
+                _fold(box, col, b + 1 if exact1 else b, _INF)
+            elif op == ">=":
+                _fold(box, col, b, _INF)
+            elif op == "<":
+                _fold(box, col, -_INF, b - 1 if exact1 else b)
             else:
-                b = bound(col, lit)
-                if b is None:
-                    continue
-                # strict ops on integral columns tighten exactly by one
-                # unit (col < '1997-05-01' excludes the May 1 file);
-                # otherwise they widen to inclusive bounds — pruning is
-                # a superset guarantee, so widening is always sound
-                exact1 = integral(col) and float(b).is_integer()
-                if op == ">":
-                    fold(col, b + 1 if exact1 else b, _INF)
-                elif op == ">=":
-                    fold(col, b, _INF)
-                elif op == "<":
-                    fold(col, -_INF, b - 1 if exact1 else b)
-                else:
-                    fold(col, -_INF, b)
-            continue
-        m = re.fullmatch(rf"({_COL})\s+(?i:IN)\s*\(({_LIT}(?:\s*,\s*{_LIT})*)\)", c)
-        if m:
-            col = m.group(1)
-            vals = [_parse_lit(t) for t in re.findall(_LIT, m.group(2))]
-            if vals:
-                equals[col] = vals
-                nums = [bound(col, v) for v in vals]
-                if all(n is not None for n in nums):
-                    fold(col, min(nums), max(nums))
-        # unmatched conjunct: contributes no skip clause (must-read)
+                _fold(box, col, -_INF, b)
     return {c: (lo, hi) for c, (lo, hi) in box.items()}, equals, nots, nullness
 
 
-def _or_leaves(orig: str, scrub: str) -> list[tuple[str, str]]:
-    """Recursive depth-0 OR split (unwrapping balanced parens between
-    levels) down to purely conjunctive leaves."""
-    orig, scrub = _unwrap2(orig, scrub)
-    parts = _split_top(orig, scrub, "OR")
-    if len(parts) == 1:
-        return [(orig, scrub)]
-    out: list[tuple[str, str]] = []
-    for po, ps in parts:
-        out.extend(_or_leaves(po, ps))
-    return out
+def _exact_clauses(atoms: list, col_types: dict | None) -> tuple[dict, dict, tuple | None] | None:
+    """(box, str_eq, points) semantically EQUAL to one conjunctive
+    branch, or None (see ``_extract_exact_clauses``): any conjunct
+    that is not captured exactly disqualifies the whole predicate."""
+    ct = col_types or {}
+    box: dict[str, list[float]] = {}
+    str_eq: dict[str, str] = {}
+    points: tuple | None = None
+
+    def bound(col: str, v):
+        # dates fold exactly (whole epoch days); timestamp folds can
+        # round sub-second literals, other strings fold to nothing
+        if not isinstance(v, str):
+            return v
+        return _temporal_num(col, v, col_types) if ct.get(col) == "date" else None
+
+    for a in atoms:
+        if a is None or a[0] in ("!=", "null", "notnull"):
+            return None
+        op, col, v = a
+        if op == "IN":
+            if (
+                points is not None  # one IN per predicate keeps the sum disjoint
+                or ct.get(col) not in _INTEGRAL_TYPES
+                or any(isinstance(x, str) or not float(x).is_integer() for x in v)
+            ):
+                return None
+            points = (col, sorted({int(x) for x in v}))
+        elif op == "=" and isinstance(v, str) and ct.get(col) == "string":
+            if str_eq.setdefault(col, v) != v:
+                return None  # contradictory equalities: bail, don't guess
+        elif op == "BETWEEN":
+            lo, hi = bound(col, v[0]), bound(col, v[1])
+            if lo is None or hi is None:
+                return None
+            _fold(box, col, lo, hi)
+        else:
+            b = bound(col, v)
+            if b is None:
+                return None
+            if op in (">", "<"):
+                # exact only on integral columns: col < X == col <= X-1
+                if ct.get(col) not in _INTEGRAL_TYPES or not float(b).is_integer():
+                    return None
+                _fold(box, col, b + 1, _INF) if op == ">" else _fold(box, col, -_INF, b - 1)
+            elif op == "=":
+                _fold(box, col, b, b)
+            elif op == ">=":
+                _fold(box, col, b, _INF)
+            else:
+                _fold(box, col, -_INF, b)
+    if not box and not str_eq and points is None:
+        return None
+    return {c: (lo, hi) for c, (lo, hi) in box.items()}, str_eq, points
+
+
+def _predicate_clauses(
+    spark: SparkSession, predicate: str, col_types: dict | None = None
+) -> tuple[list[tuple[dict, dict, dict, dict]] | None, tuple[dict, dict, tuple | None] | None]:
+    """Both clause forms from ONE parse: (skip branches, exact clauses)
+    — what ``_extract_skip_branches`` and ``_extract_exact_clauses``
+    return, for callers (the DML classifier) that need both."""
+    ors = [
+        [_atom(c) for c in _flatten(b, "And")]
+        for b in _flatten(_parse_tree(spark, predicate), "Or")
+    ]
+    branches = [_skip_clauses(atoms, col_types) for atoms in ors]
+    exact = _exact_clauses(ors[0], col_types) if len(ors) == 1 else None
+    return (branches if all(any(b) for b in branches) else None), exact
 
 
 def _extract_skip_branches(
-    predicate: str, col_types: dict | None = None
+    spark: SparkSession, predicate: str, col_types: dict | None = None
 ) -> list[tuple[dict, dict, dict, dict]] | None:
     """Per-OR-branch (box, equals, nots, nullness) skip clauses. A file may be
     skipped only when EVERY branch proves it irrelevant, so the caller
-    prunes with the UNION of per-branch keep sets. Returns None when no
-    pruning is possible: NOT anywhere (per-conjunct extraction is
-    unsound under negation), or some branch with no usable clause
-    (that branch must read everything, and union-with-everything is
-    everything)."""
-    import re
-
-    scrub = _scrub(predicate)
-    # NOT bails EXCEPT the "IS NOT NULL" phrase, which the conjunct
-    # extractor handles soundly
-    if re.search(r"(?i)\bNOT\b(?!\s+NULL\b)", scrub):
-        return None
-    branches = []
-    for o, s in _or_leaves(predicate.strip(), scrub.strip()):
-        box, equals, nots, nullness = _extract_conjuncts(o, s, col_types)
-        if not box and not equals and not nots and not nullness:
-            return None
-        branches.append((box, equals, nots, nullness))
-    return branches
+    prunes with the UNION of per-branch keep sets. Returns None when
+    some branch has no usable clause (that branch must read
+    everything, and union-with-everything is everything) — a top-level
+    ``NOT`` other than ``!=`` is such a branch."""
+    return _predicate_clauses(spark, predicate, col_types)[0]
 
 
-def _extract_skip_clauses(predicate: str, col_types: dict | None = None) -> tuple[dict, dict]:
+def _extract_skip_clauses(
+    spark: SparkSession, predicate: str, col_types: dict | None = None
+) -> tuple[dict, dict]:
     """(box, equals) for a purely conjunctive predicate — ({}, {}) when
-    the predicate disjoins or negates (use ``_extract_skip_branches``
-    for the OR-union form). Kept as the stable single-box surface the
-    tests and ``manifest_assisted_count`` callers pin."""
-    branches = _extract_skip_branches(predicate, col_types)
+    the predicate disjoins or extracts nothing (use
+    ``_extract_skip_branches`` for the OR-union form). Kept as the
+    stable single-box surface the tests pin."""
+    branches = _extract_skip_branches(spark, predicate, col_types)
     if branches is None or len(branches) != 1:
         return {}, {}
     return branches[0][0], branches[0][1]
 
+
+def _extract_exact_clauses(
+    spark: SparkSession, predicate: str, col_types: dict | None = None
+) -> tuple[dict, dict, tuple | None] | None:
+    """The strict extractor behind ``lake_count``'s metadata fast path:
+    clauses are returned ONLY when they are semantically EQUAL to the
+    whole predicate (every conjunct inclusive and fully captured),
+    because interior files are counted WITHOUT being opened — the
+    superset-only widening ``lake_scan`` tolerates (strict ops, dropped
+    conjuncts) would overcount here.
+
+    Returns (box, str_eq, points) or None:
+    * box {col: (lo, hi)} — ``BETWEEN``, ``>=``, ``<=``,
+      numeric/temporal-date ``=`` (all closed bounds) plus ``>``/``<``
+      on provably integral columns (tightened exactly by one unit);
+    * str_eq {col: 'val'} — string equality on STRING columns, exact
+      against directory-encoded partition values (every row of a file
+      shares them), boundary-read everywhere else;
+    * points — at most ONE ``col IN (v1..vn)`` over distinct integral
+      values, answered as a sum of disjoint point-box counts.
+    Any ``OR``, ``NOT``, ``IS [NOT] NULL`` or unrecognized conjunct
+    gives None. Timestamp columns are excluded (their epoch-second
+    fold can round sub-second literals); date columns fold exactly
+    (whole epoch days)."""
+    return _predicate_clauses(spark, predicate, col_types)[1]
+
+
+def _extract_exact_box(
+    spark: SparkSession, predicate: str, col_types: dict | None = None
+) -> dict | None:
+    """Box-only strict extraction (the stable pinned surface): the box
+    alone must equal the predicate, so string equalities or IN-lists
+    disqualify here — ``lake_count`` uses the richer
+    ``_extract_exact_clauses`` directly."""
+    clauses = _extract_exact_clauses(spark, predicate, col_types)
+    if clauses is None:
+        return None
+    box, str_eq, points = clauses
+    if str_eq or points is not None or not box:
+        return None
+    return box
 
 def _lake_entry(spark: SparkSession, name: str) -> dict:
     ent = _LAKE_TABLES.get((spark.sparkContext.applicationId, name))
@@ -576,6 +625,48 @@ def _lake_read_all(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _keep_files(
+    spark: SparkSession, ent: dict, predicate: str, phys: dict, files: list[str] | None
+) -> set[str] | None:
+    """The files ``lake_scan`` must read for ``predicate``: the UNION
+    of the per-OR-branch keep sets over ``files`` (every live file when
+    None), or None when no branch yields a skip clause. Column mapping
+    (round 14): manifests and footers key stats by the PHYSICAL column
+    name, so the pruning structures are re-keyed through ``phys`` and a
+    remapped column never consults a dead same-named column's stats
+    (files without the physical column stay must-read)."""
+    from .operators.layout import pruned_files
+    from .operators.snapshots import _phys_keyed
+
+    col_types = _lake_col_types(spark, ent)
+    branches = _extract_skip_branches(spark, predicate, col_types)
+    if not branches:
+        return None
+    branches, col_types = _phys_keyed((branches, col_types), phys)
+    keep: set[str] = set()
+    for box, equals, nots, nullness in branches:
+        blooms = [
+            (ent["bloom_manifests"][c], v)
+            for c, v in equals.items()
+            if c in ent["bloom_manifests"]
+        ]
+        keep |= set(
+            pruned_files(
+                spark,
+                ent["path"],
+                ent["scan_manifest"],
+                box,
+                bloom_filters=blooms,
+                equals=equals,
+                not_equals=nots,
+                nullness=nullness,
+                col_types=col_types,
+                files=files,
+            )
+        )
+    return keep
+
+
 def lake_scan(
     spark: SparkSession,
     name: str,
@@ -608,7 +699,7 @@ def lake_scan(
     branch-staged files the manifest hasn't seen stay must-read."""
     ent = _lake_entry(spark, name)
     path = ent["path"]
-    from .operators.layout import _compact_recover_tree, pruned_files
+    from .operators.layout import _compact_recover_tree
 
     read_info: dict | None = None
     if branch is not None:
@@ -626,37 +717,13 @@ def lake_scan(
                 f"branch {branch!r} references {len(missing)} missing file(s) "
                 f"(e.g. {missing[0]!r})"
             )
-        col_types = _lake_col_types(spark, ent)
-        branches_ = _extract_skip_branches(predicate, col_types)
-        if not branches_:
+        keep = _keep_files(spark, ent, predicate, _lake_phys(path, binfo=read_info), inventory)
+        if keep is None:
             return read_branch(spark, path, branch).filter(predicate)
-        from .operators.snapshots import _phys_keyed, _read_files
-
-        # column mapping (round 14): manifests/footers key stats by the
-        # PHYSICAL column name — translate the pruning structures so a
-        # remapped column never consults a dead same-named column's
-        # stats (files without the physical column stay must-read)
-        bphys = read_info.get("phys") or {}
-        if bphys:
-            branches_ = _phys_keyed(branches_, bphys)
-            col_types = _phys_keyed(col_types, bphys)
-
-        keep: set[str] = set()
-        for box, equals, nots, nullness in branches_:
-            blooms = [
-                (ent["bloom_manifests"][c], v)
-                for c, v in equals.items()
-                if c in ent["bloom_manifests"]
-            ]
-            keep |= set(
-                pruned_files(
-                    spark, path, ent["scan_manifest"], box,
-                    bloom_filters=blooms, equals=equals, not_equals=nots,
-                    nullness=nullness, col_types=col_types, files=inventory,
-                )
-            )
         if not keep:
             return read_branch(spark, path, branch).limit(0).filter(predicate)
+        from .operators.snapshots import _read_files
+
         return _read_files(spark, path, sorted(keep), read_info).filter(predicate)
     if as_of_ts is not None:
         # SELECT ... AS OF TIMESTAMP: resolve to the latest version
@@ -686,44 +753,15 @@ def lake_scan(
         _compact_recover_tree(path)
         if not predicate:
             return _lake_read_all(spark, path)
-    col_types = _lake_col_types(spark, ent)
-    branches = _extract_skip_branches(predicate, col_types)
-    if not branches:
+    # column mapping (round 14): the version's own record, so time
+    # travel prunes under the mapping in force at that version
+    keep = _keep_files(spark, ent, predicate, _lake_phys(path, version), inventory)
+    if keep is None:
         if inventory is not None:
             from .operators.snapshots import read_snapshot
 
             return read_snapshot(spark, path, version).filter(predicate)
         return _lake_read_all(spark, path).filter(predicate)
-    from .operators.snapshots import _phys_keyed, has_snapshots as _has_snaps, snapshot_info as _snap_info
-
-    # column mapping (round 14): prune by PHYSICAL stat keys (see the
-    # branch path above) — the version's own record, so time travel
-    # prunes under the mapping in force at that version
-    mphys = _snap_info(path, version).get("phys") or {} if _has_snaps(path) else {}
-    if mphys:
-        branches = _phys_keyed(branches, mphys)
-        col_types = _phys_keyed(col_types, mphys)
-    keep: set[str] = set()
-    for box, equals, nots, nullness in branches:
-        blooms = [
-            (ent["bloom_manifests"][c], v)
-            for c, v in equals.items()
-            if c in ent["bloom_manifests"]
-        ]
-        keep |= set(
-            pruned_files(
-                spark,
-                path,
-                ent["scan_manifest"],
-                box,
-                bloom_filters=blooms,
-                equals=equals,
-                not_equals=nots,
-                nullness=nullness,
-                col_types=col_types,
-                files=inventory,
-            )
-        )
     if not keep:
         # provably-empty predicate: empty frame with the table's schema
         if inventory is not None:
@@ -809,7 +847,7 @@ def lake_explain(
     if not predicate:
         return out
     col_types = _lake_col_types(spark, ent)
-    branches = _extract_skip_branches(predicate, col_types)
+    branches = _extract_skip_branches(spark, predicate, col_types)
     if not branches:
         out["reason"] = "no usable conjunct — full scan + exact filter"
         return out
@@ -972,133 +1010,6 @@ def lake_join_scan(
     return base.join(right, on=base[fact_col] == right[dcol], how="inner")
 
 
-def _extract_exact_clauses(
-    predicate: str, col_types: dict | None = None
-) -> tuple[dict, dict, tuple | None] | None:
-    """The strict extractor behind ``lake_count``'s metadata fast path:
-    clauses are returned ONLY when they are semantically EQUAL to the
-    whole predicate (every conjunct inclusive and fully captured),
-    because interior files are counted WITHOUT being opened — the
-    superset-only widening ``lake_scan`` tolerates (strict ops, dropped
-    conjuncts) would overcount here.
-
-    Returns (box, str_eq, points) or None:
-    * box {col: (lo, hi)} — ``BETWEEN``, ``>=``, ``<=``,
-      numeric/temporal-date ``=`` (all closed bounds) plus ``>``/``<``
-      on provably integral columns (tightened exactly by one unit);
-    * str_eq {col: 'val'} — string equality on STRING columns, exact
-      against directory-encoded partition values (every row of a file
-      shares them), boundary-read everywhere else;
-    * points — at most ONE ``col IN (v1..vn)`` over distinct integral
-      values, answered as a sum of disjoint point-box counts.
-    Timestamp columns are excluded (their epoch-second fold can round
-    sub-second literals); date columns fold exactly (whole epoch
-    days)."""
-    import re
-
-    scrub = _scrub(predicate)
-    if re.search(r"(?i)\b(OR|NOT)\b", scrub):
-        return None
-    orig, scrub = _unwrap2(predicate.strip(), scrub.strip())
-    box: dict[str, list[float]] = {}
-    str_eq: dict[str, str] = {}
-    points: tuple | None = None
-
-    def fold(col: str, lo, hi) -> None:
-        cur = box.setdefault(col, [-_INF, _INF])
-        cur[0] = max(cur[0], lo)
-        cur[1] = min(cur[1], hi)
-
-    def bound(col: str, lit):
-        if not isinstance(lit, str):
-            return lit
-        if (col_types or {}).get(col) != "date":
-            return None
-        return _temporal_num(col, lit, col_types)
-
-    # fold BETWEENs first, then BLANK each match in both texts (equal
-    # lengths preserved): the AND split below then sees only the
-    # remaining conjuncts, and a blank fragment is the harmless residue
-    # of a consumed BETWEEN
-    repl: list[tuple[int, int]] = []
-    for m in re.finditer(
-        rf"({_COL})\s+(?i:BETWEEN)\s+({_LIT})\s+(?i:AND)\s+({_LIT})", scrub
-    ):
-        col = m.group(1)
-        lo = bound(col, _parse_lit(orig[m.start(2) : m.end(2)]))
-        hi = bound(col, _parse_lit(orig[m.start(3) : m.end(3)]))
-        if lo is None or hi is None:
-            return None
-        fold(col, lo, hi)
-        repl.append((m.start(), m.end()))
-    for a, b in repl:
-        pad = " " * (b - a)
-        orig = orig[:a] + pad + orig[b:]
-        scrub = scrub[:a] + pad + scrub[b:]
-
-    for conj_o, conj_s in _split_top(orig, scrub, "AND"):
-        c, _cs = _unwrap2(conj_o, conj_s)
-        if not c:
-            continue  # residue of a blanked BETWEEN
-        m = re.fullmatch(rf"({_COL})\s+(?i:IN)\s*\(({_LIT}(?:\s*,\s*{_LIT})*)\)", c)
-        if m:
-            col = m.group(1)
-            vals = [_parse_lit(t) for t in re.findall(_LIT, m.group(2))]
-            if (
-                points is not None  # one IN per predicate keeps the sum disjoint
-                or (col_types or {}).get(col) not in _INTEGRAL_TYPES
-                or any(isinstance(v, str) for v in vals)
-                or any(not float(v).is_integer() for v in vals)
-            ):
-                return None
-            points = (col, sorted({int(v) for v in vals}))
-            continue
-        m = re.fullmatch(rf"({_COL})\s*(>=|>|<=|<|=|==)\s*({_LIT})", c)
-        if not m:
-            return None
-        col, op, lit = m.group(1), m.group(2), _parse_lit(m.group(3))
-        if (
-            op in ("=", "==")
-            and isinstance(lit, str)
-            and (col_types or {}).get(col) == "string"
-        ):
-            if col in str_eq and str_eq[col] != lit:
-                return None  # contradictory equalities: bail, don't guess
-            str_eq[col] = lit
-            continue
-        b = bound(col, lit)
-        if b is None:
-            return None
-        if op in (">", "<"):
-            # exact only on integral columns: col < X == col <= X-1
-            if (col_types or {}).get(col) not in _INTEGRAL_TYPES or not float(b).is_integer():
-                return None
-            fold(col, b + 1, _INF) if op == ">" else fold(col, -_INF, b - 1)
-        elif op in ("=", "=="):
-            fold(col, b, b)
-        elif op == ">=":
-            fold(col, b, _INF)
-        else:
-            fold(col, -_INF, b)
-    if not box and not str_eq and points is None:
-        return None
-    return {c: (lo, hi) for c, (lo, hi) in box.items()}, str_eq, points
-
-
-def _extract_exact_box(predicate: str, col_types: dict | None = None) -> dict | None:
-    """Box-only strict extraction (the stable pinned surface): the box
-    alone must equal the predicate, so string equalities or IN-lists
-    disqualify here — ``lake_count`` uses the richer
-    ``_extract_exact_clauses`` directly."""
-    clauses = _extract_exact_clauses(predicate, col_types)
-    if clauses is None:
-        return None
-    box, str_eq, points = clauses
-    if str_eq or points is not None or not box:
-        return None
-    return box
-
-
 def _lake_phys(path: str, version=None, binfo: dict | None = None) -> dict:
     """The column-mapping ``phys`` dict (logical -> physical parquet
     name) in force at a version / branch head (round 14). Stats in
@@ -1185,7 +1096,7 @@ def lake_count(
             return read_branch(spark, ent["path"], branch).count()
         if ent["scan_manifest"] is not None:
             col_types = _lake_col_types(spark, ent)
-            clauses = _extract_exact_clauses(predicate, col_types)
+            clauses = _extract_exact_clauses(spark, predicate, col_types)
             if clauses is not None and clauses[2] is None:
                 from .operators.snapshots import _phys_keyed
 
@@ -1225,7 +1136,7 @@ def lake_count(
                 return n
         elif ent["scan_manifest"] is not None:
             col_types = _lake_col_types(spark, ent)
-            clauses = _extract_exact_clauses(predicate, col_types)
+            clauses = _extract_exact_clauses(spark, predicate, col_types)
             if clauses is not None and clauses[2] is None:
                 from .operators.snapshots import _phys_keyed
 
@@ -1257,7 +1168,7 @@ def lake_count(
         return _lake_read_all(spark, ent["path"]).count()
     if ent["scan_manifest"] is not None:
         col_types = _lake_col_types(spark, ent)
-        clauses = _extract_exact_clauses(predicate, col_types)
+        clauses = _extract_exact_clauses(spark, predicate, col_types)
         if clauses is not None:
             from .operators.snapshots import _phys_keyed
 
@@ -1323,7 +1234,7 @@ def lake_min_max(
 
         if ent["scan_manifest"] is not None and not _lake_phys(ent["path"], version):
             col_types = _lake_col_types(spark, ent)
-            box = {} if not predicate else _extract_exact_box(predicate, col_types)
+            box = {} if not predicate else _extract_exact_box(spark, predicate, col_types)
             if box is not None:
                 return manifest_assisted_minmax(
                     spark,
@@ -1347,7 +1258,7 @@ def lake_min_max(
     # degrade to the authoritative pruned read (correct, conservative;
     # mapped tables are the rare post-reuse case)
     if ent["scan_manifest"] is not None and not _lake_phys(ent["path"]):
-        box = {} if not predicate else _extract_exact_box(predicate, col_types)
+        box = {} if not predicate else _extract_exact_box(spark, predicate, col_types)
         if box is not None:
             return manifest_assisted_minmax(
                 spark,
@@ -1501,7 +1412,7 @@ def lake_approx_distinct(
             return manifest_assisted_ndv(
                 spark, ent["path"], ndv_m, ent["scan_manifest"], col, **dvkw
             )
-        clauses = _extract_exact_clauses(predicate, col_types)
+        clauses = _extract_exact_clauses(spark, predicate, col_types)
         if clauses is not None and clauses[2] is None:
             box, str_eq, _points = clauses
             return manifest_assisted_ndv(

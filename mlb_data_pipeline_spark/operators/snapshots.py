@@ -1770,7 +1770,7 @@ def _classify_for_delete(
     path: str,
     predicate: str,
     col_types: dict | None,
-    spark: SparkSession | None = None,
+    spark: SparkSession,
     scan_manifest: str | None = None,
     files: list[str] | None = None,
     phys: dict[str, str] | None = None,
@@ -1781,12 +1781,11 @@ def _classify_for_delete(
     come from ITS rows — zero footer opens for manifest-known files,
     the difference between O(manifest scan) and O(open 100k footers)
     at scale; files the manifest hasn't seen fall back to their own
-    footer. Unparseable predicates classify everything as rewrite
-    (correct, just unpruned)."""
-    from ..catalog import _extract_exact_clauses, _extract_skip_branches
+    footer. Predicates no pruning rule recognizes classify everything
+    as rewrite (correct, just unpruned)."""
+    from ..catalog import _predicate_clauses
 
-    branches = _extract_skip_branches(predicate, col_types)
-    exact = _extract_exact_clauses(predicate, col_types)
+    branches, exact = _predicate_clauses(spark, predicate, col_types)
     # column mapping (round 14): classification consults stats by the
     # PHYSICAL parquet name — a remapped logical column's stats exist
     # only in files written since its allocation, so older files (and

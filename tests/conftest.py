@@ -5,7 +5,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from mlb_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -29,19 +30,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # independent of pytest. Regenerate the list from a full `--durations`
 # run when the suite's shape changes.
 FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
-_SLOW_LIST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "slow_tests.txt")
+_SLOW_LIST = os.path.join(_ROOT, "tests", "slow_tests.txt")
 
 
-def _slow_ids() -> set[tuple[str, str]]:
-    out = set()
+def _slow_ids() -> set[str]:
+    """Node IDs from slow_tests.txt, relative to the repo root
+    (``tests/test_x.py::name[param]``)."""
     with open(_SLOW_LIST) as f:
-        for line in f:
-            line = line.strip()
-            if not line or line.startswith("#"):
-                continue
-            path, _, test = line.partition("::")
-            out.add((os.path.basename(path), test))
-    return out
+        return {s for s in map(str.strip, f) if s and not s.startswith("#")}
 
 
 def pytest_configure(config):
@@ -62,8 +58,10 @@ def pytest_collection_modifyitems(config, items):
         reason="slow sweep; SPARK_GRAFT_FULL_TESTS=1 runs the full suite"
     )
     for item in items:
-        path, _, test = item.nodeid.partition("::")
-        if "slow" in item.keywords or (os.path.basename(path), test) in slow:
+        # the repo-relative ID, whichever directory pytest was run from
+        test = item.nodeid.partition("::")[2]
+        node_id = f"{os.path.relpath(item.path, _ROOT)}::{test}"
+        if "slow" in item.keywords or node_id in slow:
             item.add_marker(skip)
 
 

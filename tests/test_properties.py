@@ -9,7 +9,7 @@ expensive, so examples are capped — the point is edge-shape coverage
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -292,9 +292,14 @@ def test_activity_islands_equal_python_reference(spark, rows):
 # bail — lake_scan must return exactly the whole-lake filter's rows.
 # The generator deliberately produces the adversarial shapes the r10
 # defect class lives in: comparison-shaped text inside string
-# literals, AND/OR keywords in literals, nested parens, mixed
-# prunable/unprunable conjuncts, negations.
+# literals, AND/OR keywords in literals, backslash-escaped quotes,
+# nested parens, mixed prunable/unprunable conjuncts, negations.
 # ---------------------------------------------------------------------------
+
+# the text Spark reads from the literal 'x\' AND k = 1 AND note <> \'y'
+# (one string: \' is an escaped quote); one lake row carries it, so a
+# pruner that mints a fake k = 1 conjunct from it loses that row
+_ESCAPED_TAG = "x' AND k = 1 AND note <> 'y"
 
 
 @pytest.fixture(scope="module")
@@ -310,12 +315,16 @@ def _hook_lake(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("hooklake")
     lake = str(base / "data")
     manifest = str(base / "manifest")
-    df = spark.range(4_000).select(
+    # four range slices: the row carrying _ESCAPED_TAG (k = 3999) lands
+    # in files whose k range excludes 1 on any core count
+    df = spark.range(0, 4_000, 1, 4).select(
         F.col("id").alias("k"),
         # v is NULL on a stripe so IS [NOT] NULL shapes have real rows
         F.when(F.col("id") % 7 != 0, F.col("id") * 7 % 1000).alias("v"),
         (F.col("id") % 4).alias("p"),
-        F.concat(F.lit("t"), (F.col("id") % 5).cast("string")).alias("tag"),
+        F.when(F.col("id") == 3999, F.lit(_ESCAPED_TAG))
+        .otherwise(F.concat(F.lit("t"), (F.col("id") % 5).cast("string")))
+        .alias("tag"),
     )
     df.write.partitionBy("p").parquet(lake)
     save_scan_manifest(spark, lake, ["k", "v"], manifest)
@@ -324,7 +333,15 @@ def _hook_lake(spark, tmp_path_factory):
 
 
 _LITS = st.sampled_from(
-    ["'a AND b'", "'k BETWEEN 1 AND 2'", "'x OR y'", "'t1'", "'v = 7 AND k = 3'", "':-)'"]
+    [
+        "'a AND b'",
+        "'k BETWEEN 1 AND 2'",
+        "'x OR y'",
+        "'t1'",
+        "'v = 7 AND k = 3'",
+        "':-)'",
+        "'x\\' AND k = 1 AND note <> \\'y'",
+    ]
 )
 _NUMS = st.integers(min_value=-100, max_value=4100)
 
@@ -366,6 +383,7 @@ def _predicates(draw, depth=2):
 
 @settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
 @given(pred=_predicates())
+@example(pred="tag = 'x\\' AND k = 1 AND note <> \\'y'")
 def test_lake_scan_matches_full_filter_on_random_predicates(spark, _hook_lake, pred):
     from mlb_data_pipeline_spark.catalog import lake_scan
 

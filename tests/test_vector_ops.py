@@ -1068,3 +1068,32 @@ def test_table_row_count_matches_scan_count(spark, sf_dir):
 
     for name in ("embeddings", "documents", "nation"):
         assert table_row_count(sf_dir, name) == load_table(spark, sf_dir, name).count()
+
+
+def test_table_row_count_skips_hidden_entries(spark, tmp_path):
+    """Entries starting with ``_`` or ``.`` are not data to
+    ``spark.read.parquet``: a stray ``_temporary/`` left by an aborted
+    write, ``_SUCCESS`` and ``.crc`` checksums must not make the footer
+    count raise or miscount. A real partition subdirectory still
+    raises."""
+    import os
+
+    from mlb_data_pipeline_spark.catalog import table_path, table_row_count
+
+    flat = str(tmp_path / "flat")
+    path = table_path(flat, "nation")
+    spark.range(37).coalesce(2).write.parquet(path)
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    with open(os.path.join(path, "_temporary", "0", "part-9.parquet"), "w") as f:
+        f.write("torn")
+    for junk in ("_SUCCESS", ".part-0.crc"):
+        with open(os.path.join(path, junk), "a"):
+            pass
+    assert table_row_count(flat, "nation") == load_table(spark, flat, "nation").count() == 37
+
+    nested = str(tmp_path / "nested")
+    spark.range(10).withColumn("p", F.col("id") % 2).write.partitionBy("p").parquet(
+        table_path(nested, "nation")
+    )
+    with pytest.raises(ValueError, match="subdirectories"):
+        table_row_count(nested, "nation")
