@@ -554,25 +554,17 @@ def _lake_col_types(spark: SparkSession, ent: dict) -> dict:
     the added column without re-registration. Unversioned lakes cache
     once (their schema has no commit to change under).
 
-    Source of truth, in order: the head COMMIT RECORD's persisted
-    schema (round 12 — zero file reads), else the lake read's resolved
-    schema (one footer for a plain dir; merge-schema snapshot read for
-    a pre-round-12 log without the schema leg)."""
-    from .operators.snapshots import current_version, snapshot_info
+    Source of truth: the head COMMIT RECORD's schema (zero file
+    reads); a plain, never-committed dir reads its footer schema."""
+    from .operators.snapshots import _record_schema, current_version, snapshot_info
 
     ver = current_version(ent["path"])
     if "col_types" not in ent or ent.get("col_types_ver") != ver:
-        schema = None
-        if ver is not None:
-            sj = snapshot_info(ent["path"], ver).get("schema")
-            if sj:
-                import json as _json
-
-                from pyspark.sql.types import StructType
-
-                schema = StructType.fromJson(_json.loads(sj))
-        if schema is None:
-            schema = _lake_read_all(spark, ent["path"]).schema
+        schema = (
+            _lake_read_all(spark, ent["path"]).schema
+            if ver is None
+            else _record_schema(ent["path"], snapshot_info(ent["path"], ver))
+        )
         ent["col_types"] = {f.name: f.dataType.simpleString() for f in schema.fields}
         ent["col_types_ver"] = ver
     return ent["col_types"]
@@ -815,6 +807,7 @@ def lake_explain(
         _data_files,
         _partition_skippable,
         _partition_values,
+        _read_scan_manifest,
     )
 
     ent = _lake_entry(spark, name)
@@ -867,11 +860,10 @@ def lake_explain(
     out["branches"] = len(branches)
     live_set = set(live)
     mf = (
-        spark.read.option("mergeSchema", "true").parquet(ent["scan_manifest"])
+        _read_scan_manifest(spark, ent["scan_manifest"])
         if ent["scan_manifest"] is not None
         else None
     )
-    has_nulls = mf is not None and "nulls" in mf.columns
 
     def _rule_files(miss) -> set[str]:
         # the skip decision distributes; only skipped NAMES collect
@@ -906,7 +898,7 @@ def lake_explain(
                     )
                 )
             by_rule["stats"] = _rule_files(stats_miss) & live_set
-            if nullness and has_nulls:
+            if nullness:
                 nulls_miss = F.lit(False)
                 for c, kind in nullness.items():
                     if kind == "null":
@@ -1087,10 +1079,7 @@ def lake_count(
             dvr = binfo.get("dv_rows") or {}
             if rows is not None:
                 try:
-                    return sum(
-                        int(rows[n]) - int(dvr.get(n, dvr.get(os.path.basename(n), 0)))
-                        for n in binfo["files"]
-                    )
+                    return sum(int(rows[n]) - int(dvr.get(n, 0)) for n in binfo["files"])
                 except KeyError:
                     pass
             return read_branch(spark, ent["path"], branch).count()

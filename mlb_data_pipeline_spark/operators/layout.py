@@ -109,15 +109,18 @@ def _data_files(path: str) -> list[str]:
 
 
 def _relpath_col(path: str):
-    """``input_file_name()`` reduced to the path RELATIVE to the lake
-    root — one regexp strip of the resolved ``file:`` URI prefix, so
-    bloom-manifest file names match ``_data_files`` in flat and
-    partitioned lakes alike."""
+    """The scanned file's path RELATIVE to the lake root, exactly as
+    ``_data_files`` names it — the key of Bloom/NDV manifest rows and
+    deletion-vector masks in flat and partitioned lakes alike. The
+    scan reports a percent-encoded URI (a hive value ``a:b`` sits in
+    dir ``p=a%3Ab``, reported as ``p=a%253Ab``): decode it, keeping
+    ``+`` literal as a URI path does, then strip the ``file:`` root."""
     import re as _re
 
     base = os.path.abspath(path)
+    uri = F.replace(F.col("_metadata.file_path"), F.lit("+"), F.lit("%2B"))
     return F.regexp_replace(
-        F.input_file_name(), "^(file:/*)?" + _re.escape(base.lstrip("/")) + "/", ""
+        F.url_decode(uri), "^(file:/*)?" + _re.escape(base.lstrip("/")) + "/", ""
     )
 
 
@@ -402,6 +405,17 @@ def zorder_specs(df: DataFrame, cols: list[str]) -> list[tuple[str, int, int]]:
     return [(c, row[f"__lo_{c}"], row[f"__hi_{c}"]) for c in cols]
 
 
+# The scan manifest's one schema. Both writers produce it and every
+# reader states it (``_read_scan_manifest``), so planning never infers
+# a manifest schema from footers; a file without ``nulls`` reads it as
+# NULL, "unknown", which never prunes.
+_MANIFEST_SCHEMA = "file string, rows long, col string, lo double, hi double, nulls long"
+
+
+def _read_scan_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
+    return spark.read.schema(_MANIFEST_SCHEMA).parquet(manifest_path)
+
+
 def build_scan_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
     """The footer stats of every data file in ``path`` as a DataFrame:
     (file, rows, col, lo, hi, nulls) — long format so a box check is a
@@ -410,31 +424,27 @@ def build_scan_manifest(spark: SparkSession, path: str, cols: list[str]) -> Data
     ``nulls`` (round 11) is the column's footer null count, NULL when
     the footer didn't say — the metadata-count fast path needs a
     provable zero before trusting an unopened file's row count."""
-    stats = file_stats(path, cols)
+    return spark.createDataFrame(_manifest_rows(file_stats(path, cols), cols), _MANIFEST_SCHEMA)
+
+
+def _manifest_rows(stats: list[dict], cols: list[str]) -> list[tuple]:
+    """Scan-manifest rows for ``file_stats`` output."""
     rows = []
     for fs in stats:
         for c in cols:
             nc = fs["nulls"].get(c)
+            nc = int(nc) if nc is not None else None
             if c in fs["min"] and c in fs["max"]:
                 rows.append(
-                    (
-                        fs["file"],
-                        int(fs["rows"]),
-                        c,
-                        float(fs["min"][c]),
-                        float(fs["max"][c]),
-                        int(nc) if nc is not None else None,
-                    )
+                    (fs["file"], int(fs["rows"]), c, float(fs["min"][c]), float(fs["max"][c]), nc)
                 )
-            elif nc is not None and int(nc) == int(fs["rows"]) and fs["rows"] > 0:
+            elif nc is not None and nc == int(fs["rows"]) and fs["rows"] > 0:
                 # PROVABLY all-null column: no min/max exists, but the
                 # fact itself prunes — a box can never match (lo/hi
                 # NULL rows mean "no non-null values"), and IS NOT NULL
                 # skips the file outright (round 11)
-                rows.append((fs["file"], int(fs["rows"]), c, None, None, int(nc)))
-    return spark.createDataFrame(
-        rows, "file string, rows long, col string, lo double, hi double, nulls long"
-    )
+                rows.append((fs["file"], int(fs["rows"]), c, None, None, nc))
+    return rows
 
 
 def save_scan_manifest(spark: SparkSession, path: str, cols: list[str], manifest_path: str) -> None:
@@ -593,7 +603,7 @@ def pruned_files(
         for bloom_path, value in bloom_filters or []:
             kept -= _bloom_skippable(spark, bloom_path, value)
         return sorted(kept)
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
+    mf = _read_scan_manifest(spark, manifest_path)
     miss = F.lit(False)
     for c, (lo, hi) in box.items():
         try:
@@ -607,7 +617,7 @@ def pruned_files(
             (F.col("col") == c)
             & (F.col("lo").isNull() | (F.col("hi") < F.lit(lo_f)) | (F.col("lo") > F.lit(hi_f)))
         )
-    if nullness and "nulls" in mf.columns:
+    if nullness:
         # per-file null counts (round 11): "col IS NULL" skips files
         # PROVABLY null-free (nulls == 0); "col IS NOT NULL" skips
         # all-null files (nulls == rows). NULL nulls = unknown = keep.
@@ -1399,35 +1409,13 @@ def append_scan_manifest(spark: SparkSession, path: str, cols: list[str], manife
     between the two only costs pruning on the new files (they are
     must-read until statted), never correctness. Idempotent: re-running
     with no new files appends nothing."""
-    known = {r.file for r in spark.read.parquet(manifest_path).select("file").distinct().collect()}
+    known = {r.file for r in _read_scan_manifest(spark, manifest_path).select("file").distinct().collect()}
     new_names = [n for n in _data_files(path) if n not in known]
-    if not new_names:
-        return
-    rows = []
-    for fs in file_stats(path, cols):
-        if fs["file"] not in set(new_names):
-            continue
-        for c in cols:
-            nc = fs["nulls"].get(c)
-            if c in fs["min"] and c in fs["max"]:
-                rows.append(
-                    (
-                        fs["file"],
-                        int(fs["rows"]),
-                        c,
-                        float(fs["min"][c]),
-                        float(fs["max"][c]),
-                        int(nc) if nc is not None else None,
-                    )
-                )
-            elif nc is not None and int(nc) == int(fs["rows"]) and fs["rows"] > 0:
-                rows.append((fs["file"], int(fs["rows"]), c, None, None, int(nc)))
+    rows = _manifest_rows(file_stats(path, cols, new_names), cols)
     if rows:
-        # mergeSchema on read keeps pre-round-11 manifests (no nulls
-        # column) appendable; their rows read as nulls=NULL = unknown
-        spark.createDataFrame(
-            rows, "file string, rows long, col string, lo double, hi double, nulls long"
-        ).coalesce(1).write.mode("append").parquet(manifest_path)
+        spark.createDataFrame(rows, _MANIFEST_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(manifest_path)
 
 
 # ---------------------------------------------------------------------------
@@ -1597,16 +1585,11 @@ def _classify_box_files(
     per-file stats are version-independent facts."""
     import math
 
-    # mergeSchema: pre-round-11 manifests lack the nulls column; their
-    # rows surface nulls=NULL = unknown, which classifies as boundary
-    # (read + filter) — sound, never overcounting
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
-    has_nulls_col = "nulls" in mf.columns
+    mf = _read_scan_manifest(spark, manifest_path)
     rows_by_file = {r.file: r.rows for r in mf.select("file", "rows").distinct().collect()}
     stats = {}
     for r in mf.filter(F.col("col").isin(list(box))).collect():
-        nc = r.nulls if has_nulls_col else None
-        stats.setdefault(r.file, {})[r.col] = (r.lo, r.hi, nc)
+        stats.setdefault(r.file, {})[r.col] = (r.lo, r.hi, r.nulls)
     inside: list[str] = []
     boundary: list[str] = []
     existing = set(_data_files(path) if files is None else files)
@@ -1718,7 +1701,7 @@ def manifest_assisted_count(
     with live deletion vectors, an INTERIOR file's live matching rows
     are its physical rows minus its masked positions (every physical
     row matches the box, masked ones are simply gone), so interior
-    files contribute ``rows − dv_rows[basename]`` still unopened;
+    files contribute ``rows − dv_rows[file]`` still unopened;
     boundary files read through ``boundary_reader`` (the caller's
     mask-applying snapshot reader) instead of the raw parquet paths.
     The fast path no longer degrades wholesale under DVs."""
@@ -1727,10 +1710,7 @@ def manifest_assisted_count(
         spark, path, manifest_path, box, col_types, equals_strs, files=files
     )
     dvr = dv_rows or {}
-    metadata_count = sum(
-        int(rows_by_file[f]) - int(dvr.get(f, dvr.get(os.path.basename(f), 0)))
-        for f in inside
-    )
+    metadata_count = sum(int(rows_by_file[f]) - int(dvr.get(f, 0)) for f in inside)
     if not boundary:
         return metadata_count
     if boundary_reader is not None:
@@ -1799,9 +1779,9 @@ def manifest_assisted_minmax(
     dvr = dv_rows or {}
 
     def _is_masked(f: str) -> bool:
-        return int(dvr.get(f, dvr.get(os.path.basename(f), 0))) > 0
+        return int(dvr.get(f, 0)) > 0
 
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
+    mf = _read_scan_manifest(spark, manifest_path)
     stats: dict[str, dict[str, tuple]] = {}
     want_cols = set(box) | {col}
     for r in mf.filter(F.col("col").isin(list(want_cols))).collect():
@@ -1898,7 +1878,7 @@ def compact_scan_manifest(spark: SparkSession, path: str, manifest_path: str) ->
     import shutil
 
     on_disk = set(_data_files(path))
-    mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
+    mf = _read_scan_manifest(spark, manifest_path)
     rows_before = mf.count()
     known = {r.file for r in mf.select("file").distinct().collect()}
     stale = known - on_disk
@@ -1930,7 +1910,7 @@ def verify_manifest(spark: SparkSession, path: str, manifest_path: str) -> dict:
     existing day-2 legs (``append_scan_manifest`` for missing,
     ``save_scan_manifest`` to rebuild)."""
     on_disk = set(_data_files(path))
-    mf = spark.read.parquet(manifest_path)
+    mf = _read_scan_manifest(spark, manifest_path)
     known = {r.file for r in mf.select("file").distinct().collect()}
     missing = sorted(on_disk - known)
     stale = sorted(known - on_disk)
@@ -2010,7 +1990,7 @@ def join_pruned_files(
     ranges: dict[str, tuple[float, float]] = {}
     allnull: set[str] = set()
     if manifest_path is not None:
-        mf = spark.read.option("mergeSchema", "true").parquet(manifest_path)
+        mf = _read_scan_manifest(spark, manifest_path)
         for r in mf.filter(F.col("col") == col).collect():
             if r.lo is not None and r.hi is not None:
                 ranges[r.file] = (float(r.lo), float(r.hi))
@@ -2161,7 +2141,7 @@ def manifest_assisted_ndv(
     dvr = dv_rows or {}
 
     def _is_masked(f: str) -> bool:
-        return int(dvr.get(f, dvr.get(os.path.basename(f), 0))) > 0
+        return int(dvr.get(f, 0)) > 0
 
     masked_names = sorted(f for f in (*inside, *boundary) if _is_masked(f))
     if masked_names and masked_reader is None:

@@ -44,12 +44,12 @@ Iceberg/Delta-shaped transaction log on top of the same directory:
   counts minus mask counts, zero reads), ``lake_stats``
   (live/dead/unreferenced debt from metadata), and exactly-once
   VISIBLE streaming ingestion (streaming/jobs.lake_snapshot_stream).
-* **Full schema evolution (round 12)** — the commit record's schema
-  is authoritative for every read (``_read_files``: explicit read
-  schema, zero footer-merge jobs), so ALTER TABLE is metadata-only:
-  ``lake_drop_column``, ``lake_rename_column`` (coalesce-resolved
-  name lineage), ``lake_widen_column`` (lossless promotions, parquet
-  type promotion reads the narrow files).
+* **Full schema evolution (round 12)** — every commit records the
+  table schema, the authority for every read (``_read_files``:
+  explicit read schema, zero footer-merge jobs), so ALTER TABLE is
+  metadata-only: ``lake_drop_column``, ``lake_rename_column`` (a
+  relabel through the column mapping), ``lake_widen_column`` (lossless
+  promotions, parquet type promotion reads the narrow files).
 * **Deletion vectors (round 12)** — ``lake_delete(use_dv=True)``
   masks matching positions via one parquet sidecar instead of
   rewriting boundary files; every reader anti-joins the mask; the
@@ -63,11 +63,11 @@ Iceberg/Delta-shaped transaction log on top of the same directory:
   record shape (plus ``fork_version``). Every commit function takes
   ``branch=`` and runs the one protocol on that ref's chain — the ref
   is the only thing that tells a main commit from a branch commit.
-* **Round 13** — (a) NAME-REUSE GUARDS: dropped columns (and their
-  rename-lineage aliases) tombstone in ``dropped_names``; the
-  evolution paths reject reusing any tombstoned/lineage name (old
-  files still hold those bytes — reuse would resurface them); a
-  truncating overwrite resets tombstones/lineage/masks. (b) DV
+* **Round 13** — (a) NAME-REUSE GUARDS: dropped columns' physical
+  names tombstone in ``dropped_names`` (old files still hold those
+  bytes); a re-added name stores under a fresh physical name (round
+  14 column mapping); a truncating overwrite resets tombstones,
+  mapping and masks. (b) DV
   commits ship their mask as a DELTA merged into the head actually
   landed on — concurrent DV deletes merge, same-file masks raise.
   (c) DML ON BRANCHES: ``lake_delete/update/merge(branch=)`` and the
@@ -474,7 +474,6 @@ def commit_snapshot(
     summary: dict | None = None,
     parent: int | None = None,
     schema_json: str | None = None,
-    renames: dict[str, list[str]] | None = None,
     dvs: list[str] | None = None,
     dv_rows: dict[str, int] | None = None,
     dropped_names: list[str] | None = None,
@@ -499,12 +498,13 @@ def commit_snapshot(
     reads). ``COUNT(*)`` on a snapshot lake is therefore a pure
     metadata sum at any version, Iceberg-style.
 
-    ``schema_json`` (round 12): the table schema as a Spark
-    ``StructType.json()`` string; inherited from the parent when None,
-    so an empty table (delete-all, truncating overwrite) stays
-    readable with its true schema even after vacuum removed every
-    dead data file. Every other metadata leg inherits the same way
-    (see ``_INHERITED_KEYS``)."""
+    ``schema_json``: the table schema as a Spark ``StructType.json()``
+    string; inherited from the parent when None, so an empty table
+    (delete-all, truncating overwrite) stays readable with its true
+    schema even after vacuum removed every dead data file. Every
+    record carries one: a ref's first commit without it raises. Every
+    other metadata leg inherits the same way (see
+    ``_INHERITED_KEYS``)."""
     # main's head is read by a one-argument call: tests patch
     # current_version to pin the exclusive-put race window
     head = current_version(path, branch) if branch else current_version(path)
@@ -532,7 +532,6 @@ def commit_snapshot(
     record.update(_files_repr(path, prev, files, file_rows))
     given = {
         "schema": schema_json,
-        "renames": renames,
         "dvs": dvs,
         "dv_rows": dv_rows,
         "dv_files": dv_files,
@@ -544,6 +543,11 @@ def commit_snapshot(
         v = v if v is not None else prev.get(k)
         if v:
             record[k] = sorted(set(v)) if k == "dropped_names" else v
+    if "schema" not in record:
+        raise ValueError(
+            f"{_ref_label(branch)}v{version} of {path!r} would record no schema — "
+            "a lake's first commit must pass schema_json"
+        )
     return _put_record(path, branch, record)
 
 
@@ -553,25 +557,25 @@ def commit_snapshot(
 #
 # * "fork_version" — the main version a branch forked from (branch
 #   records only; never passed, always inherited).
-# * "schema", "renames" (round 12 full schema evolution) — the
-#   authoritative read schema and {current column -> [prior names,
-#   newest first]}, so every later commit keeps resolving pre-rename
-#   files.
-# * "dvs", "dv_rows" (round 12 deletion vectors) — relative names of
-#   position sidecars under _snapshots/dv/ and {file: deleted rows};
-#   entries for files that left the live set are harmless (their
-#   anti-join matches nothing; row counting sums live files only).
-# * "dv_files" (round 14) — {sidecar name -> [masked file basenames]},
-#   written by the DV commit that created the sidecar. Pure pruning
-#   metadata: a rewrite that removes every file a sidecar masks can
-#   drop the sidecar reference, so vacuum reclaims the sidecar once
-#   the old versions expire. Sidecars without an entry (pre-round-14
-#   records) are simply retained conservatively.
-# * "dropped_names" (round 13) — column names retired by
-#   lake_drop_column (plus their rename-lineage aliases). Old files
-#   still carry the bytes under these names, so REUSING one would
-#   resurface dropped data — the evolution paths allocate a fresh
-#   physical name for any new column found here.
+# * "schema" — the table schema (``StructType.json()``), the one
+#   authority for every read. Every record carries it: the first
+#   commit of a lake records it and every later one inherits or
+#   replaces it.
+# * "dvs", "dv_rows" (round 12 deletion vectors) — names of position
+#   sidecars under _snapshots/dv/ and {file: deleted rows}, keyed by
+#   the lake-relative file name the live list uses; entries for files
+#   that left the live set are harmless (their anti-join matches
+#   nothing; row counting sums live files only).
+# * "dv_files" (round 14) — {sidecar name -> [masked files]}, written
+#   by the DV commit that created the sidecar. Pure pruning metadata:
+#   a rewrite that removes every file a sidecar masks drops the
+#   sidecar reference, so vacuum reclaims the sidecar once the old
+#   versions expire.
+# * "dropped_names" (round 13) — the physical names of columns
+#   retired by lake_drop_column. Old files still carry the bytes under
+#   these names, so REUSING one would resurface dropped data — the
+#   evolution paths allocate a fresh physical name for any new column
+#   found here.
 # * "phys" (round 14 — the Delta column-mapping / Iceberg column-ID
 #   shape) — {logical column -> PHYSICAL parquet column name}, sparse
 #   (absent = identity). Lets a dropped or renamed-away name be
@@ -580,7 +584,6 @@ def commit_snapshot(
 _INHERITED_KEYS = (
     "fork_version",
     "schema",
-    "renames",
     "dvs",
     "dv_rows",
     "dv_files",
@@ -694,7 +697,6 @@ def _commit_filechange(
     planned_dv_rows: dict[str, int] | None = None,
     dv_files_add: dict[str, list[str]] | None = None,
     spark: SparkSession | None = None,
-    renames: dict[str, list[str]] | None = None,
     dropped_names: list[str] | None = None,
     require_schema: str | None = None,
     phys: dict[str, str] | None = None,
@@ -713,8 +715,8 @@ def _commit_filechange(
 
     Deletion-vector commits (round 13 — ADVICE r12 #1) pass their mask
     as a DELTA, never an absolute list: ``dv_add`` names the new
-    sidecar(s), ``dv_rows_add`` the per-file (basename) deleted-row
-    deltas, ``masked_files`` the live RELATIVE names the delta masks,
+    sidecar(s), ``dv_rows_add`` the per-file deleted-row deltas,
+    ``masked_files`` the live names the delta masks,
     and ``planned_dv_rows`` the dv_rows map of the head the plan read.
     The commit merges the delta into the dvs/dv_rows of the head it
     actually lands on, so a concurrent DV delete's sidecar reference
@@ -735,9 +737,9 @@ def _commit_filechange(
     the planned head's record when the caller didn't pass it).
 
     Mask-metadata PRUNING (round 14 — ADVICE r13 #4): when this commit
-    removes files, dv_rows entries for basenames no longer live are
-    dropped, and sidecars whose recorded masked basenames
-    (``dv_files``) are all dead are dropped too — a rewrite that
+    removes files, dv_rows entries for files no longer live are
+    dropped, and sidecars whose recorded masked files (``dv_files``)
+    are all dead are dropped too — a rewrite that
     materializes masks stops referencing them, so vacuum can reclaim
     the sidecars once older versions expire, instead of the metadata
     bloating monotonically. On a branch this keeps a compaction's
@@ -800,8 +802,7 @@ def _commit_filechange(
                             "state; re-plan and retry"
                         ) from exc
                 for rel in sorted(removed):
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr_lazy.get(b, 0)):
+                    if int(head_dvr.get(rel, 0)) != int(plan_dvr_lazy.get(rel, 0)):
                         raise SnapshotConflictError(
                             f"planned against {ref}v{expect} but head is v{head}, "
                             f"and a concurrent deletion vector masks {rel!r}, "
@@ -822,8 +823,7 @@ def _commit_filechange(
                             f"{rel!r} — this deletion vector no longer applies; "
                             "re-plan and retry"
                         )
-                    b = os.path.basename(rel)
-                    if int(head_dvr.get(b, 0)) != int(plan_dvr.get(b, 0)):
+                    if int(head_dvr.get(rel, 0)) != int(plan_dvr.get(rel, 0)):
                         raise SnapshotConflictError(
                             f"planned against {ref}v{expect} but head is v{head}, and a "
                             f"concurrent deletion vector masks {rel!r} too — "
@@ -837,8 +837,8 @@ def _commit_filechange(
             head_dvs = list(head_info.get("dvs") or [])
             dvs = head_dvs + [s for s in (dv_add or []) if s not in head_dvs]
             dv_rows = dict(head_info.get("dv_rows") or {})
-            for b, n in (dv_rows_add or {}).items():
-                dv_rows[b] = int(dv_rows.get(b, 0)) + int(n)
+            for f, n in (dv_rows_add or {}).items():
+                dv_rows[f] = int(dv_rows.get(f, 0)) + int(n)
             dv_files = {**(head_info.get("dv_files") or {}), **(dv_files_add or {})}
         elif removed and (head_info.get("dvs") or head_info.get("dv_rows")):
             dvs = list(head_info.get("dvs") or [])
@@ -849,8 +849,8 @@ def _commit_filechange(
             # the rewrite read through those masks, so nothing live
             # references them — dead entries are harmless to reads but
             # bloat every later commit and pin sidecars in vacuum
-            live_base = {os.path.basename(n) for n in files}
-            dv_rows = {b: n for b, n in dv_rows.items() if b in live_base}
+            kept = set(files)
+            dv_rows = {f: n for f, n in dv_rows.items() if f in kept}
             if not dv_rows:
                 dvs, dv_files = [], {}
             else:
@@ -858,9 +858,9 @@ def _commit_filechange(
                     s
                     for s in (dvs or [])
                     if s not in (dv_files or {})
-                    or any(b in live_base for b in dv_files[s])
+                    or any(f in kept for f in dv_files[s])
                 ]
-                dv_files = {s: bs for s, bs in (dv_files or {}).items() if s in dvs}
+                dv_files = {s: fs for s, fs in (dv_files or {}).items() if s in dvs}
         try:
             return commit_snapshot(
                 path,
@@ -873,7 +873,6 @@ def _commit_filechange(
                 dv_rows=dv_rows,
                 dv_files=dv_files,
                 spark=spark,
-                renames=renames,
                 dropped_names=dropped_names,
                 phys=phys,
                 branch=branch,
@@ -953,21 +952,20 @@ def lake_write(
         raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
     head_info = _head_record(path)
     head, live = head_info["version"], head_info["files"]
-    evolved_schema_json: str | None = None
+    # the table schema this commit records: an overwrite or a write
+    # onto an empty table IS df's schema; an append onto a plain parquet
+    # dir records the adopted files' schema; an evolving append the
+    # recorded schema plus added columns (recorded types win — see the
+    # type gate); any other append inherits
+    schema_json: str | None = None if live and mode == "append" else df.schema.json()
     evolved_phys: dict[str, str] | None = None
     if live and mode == "append":
-        recorded = None
-        if head_info.get("schema"):
-            from pyspark.sql.types import StructType
-
-            recorded = StructType.fromJson(json.loads(head_info["schema"]))
-        cur_cols = (
-            set(recorded.names)
-            if recorded is not None
-            else set(read_snapshot(spark, path).columns)
-            if head
-            else set(spark.read.option("mergeSchema", "true").parquet(path).columns)
+        recorded = (
+            _record_schema(path, head_info) if head else _adopt_schema(spark, path, live)
         )
+        if not head:
+            schema_json = recorded.json()
+        cur_cols = set(recorded.names)
         new_cols = set(df.columns)
         if new_cols != cur_cols and not allow_schema_evolution:
             raise ValueError(
@@ -982,13 +980,13 @@ def lake_write(
                 )
             # name REUSE (round 13 rejected it; round 14 makes it SAFE
             # via column mapping): a new column named like a dropped
-            # tombstone, a rename-lineage alias, or a live physical
-            # name would absorb old files' dead bytes if stored under
-            # its own name — so it stores under a freshly ALLOCATED
-            # physical name instead. Old files have no bytes there
-            # (they read NULL), the dead bytes stay unreferenced, and
-            # the new column is a genuinely new identity — its type is
-            # free (the gate below only checks recorded columns).
+            # tombstone or a live physical name would absorb old
+            # files' dead bytes if stored under its own name — so it
+            # stores under a freshly ALLOCATED physical name instead.
+            # Old files have no bytes there (they read NULL), the dead
+            # bytes stay unreferenced, and the new column is a
+            # genuinely new identity — its type is free (the gate below
+            # only checks recorded columns).
             reused = sorted((new_cols - cur_cols) & _reuse_blocked_names(head_info))
             if reused:
                 burned = (
@@ -999,37 +997,34 @@ def lake_write(
                     pmap[name] = _alloc_phys(name, burned)
                     burned.add(pmap[name])
                 evolved_phys = pmap
-            if recorded is not None:
-                # type gate (round 13, ADVICE r12 #3): an evolving
-                # append must never NARROW a recorded column. Equal
-                # types pass; a lossless widening (df wider) widens the
-                # record; a promotable-narrower df keeps the recorded
-                # wide type (parquet promotion reads the narrow files);
-                # anything else is a type conflict.
-                from pyspark.sql.types import StructField, StructType
+            # type gate (round 13, ADVICE r12 #3): an evolving append
+            # must never NARROW a recorded column. Equal types pass; a
+            # lossless widening (df wider) widens the record; a
+            # promotable-narrower df keeps the recorded wide type
+            # (parquet promotion reads the narrow files); anything else
+            # is a type conflict.
+            from pyspark.sql.types import StructField, StructType
 
-                df_types = {f.name: f.dataType for f in df.schema.fields}
-                out_fields = []
-                for f in recorded.fields:
-                    dft = df_types[f.name]
-                    cur_s, new_s = f.dataType.simpleString(), dft.simpleString()
-                    if new_s == cur_s:
-                        out_fields.append(f)
-                    elif new_s in _WIDEN_OK.get(cur_s, set()):
-                        out_fields.append(StructField(f.name, dft, True))
-                    elif cur_s in _WIDEN_OK.get(new_s, set()):
-                        out_fields.append(f)  # df narrower but promotable
-                    else:
-                        raise ValueError(
-                            f"schema evolution type conflict on {f.name!r}: "
-                            f"lake has {cur_s}, write has {new_s} — only "
-                            "lossless promotions are allowed "
-                            "(evolution must never change a stored value)"
-                        )
-                out_fields += [
-                    f for f in df.schema.fields if f.name not in set(recorded.names)
-                ]
-                evolved_schema_json = StructType(out_fields).json()
+            df_types = {f.name: f.dataType for f in df.schema.fields}
+            out_fields = []
+            for f in recorded.fields:
+                dft = df_types[f.name]
+                cur_s, new_s = f.dataType.simpleString(), dft.simpleString()
+                if new_s == cur_s:
+                    out_fields.append(f)
+                elif new_s in _WIDEN_OK.get(cur_s, set()):
+                    out_fields.append(StructField(f.name, dft, True))
+                elif cur_s in _WIDEN_OK.get(new_s, set()):
+                    out_fields.append(f)  # df narrower but promotable
+                else:
+                    raise ValueError(
+                        f"schema evolution type conflict on {f.name!r}: "
+                        f"lake has {cur_s}, write has {new_s} — only "
+                        "lossless promotions are allowed "
+                        "(evolution must never change a stored value)"
+                    )
+            out_fields += [f for f in df.schema.fields if f.name not in cur_cols]
+            schema_json = StructType(out_fields).json()
     existing = _partition_cols(live)
     pcols = list(partition_by) if partition_by is not None else existing
     if existing and mode == "append" and pcols != existing:
@@ -1046,23 +1041,12 @@ def lake_write(
         else head_info
     )
     new = _write_new_files(df, path, pcols, info=write_info)
-    # the table schema this commit establishes: an overwrite IS df's
-    # schema; an evolving append is the recorded schema + added columns
-    # (recorded types win — see the type gate); a plain append inherits
-    schema_json = (
-        evolved_schema_json
-        if evolved_schema_json is not None
-        else df.schema.json()
-        if mode == "overwrite" or allow_schema_evolution or not live
-        else None
-    )
     if mode == "overwrite":
         # a truncating overwrite's file list is head-independent: a
         # conflict only means the version number moved — retake it.
-        # It also RESETS the evolution/mask state (empty renames /
-        # tombstones / dvs block inheritance): every live file is this
-        # commit's own, so no stale lineage can bite and name reuse
-        # becomes legal again (round 13).
+        # It also RESETS the evolution/mask state (empty tombstones /
+        # mapping / dvs block inheritance): every live file is this
+        # commit's own, so no dead bytes can resurface (round 13).
         version = None
         for attempt in range(_COMMIT_RETRIES + 1):
             try:
@@ -1070,7 +1054,7 @@ def lake_write(
                     path, new, "overwrite",
                     summary={"files_added": len(new)},
                     parent=current_version(path) or 0, schema_json=schema_json,
-                    renames={}, dvs=[], dv_rows={}, dropped_names=[],
+                    dvs=[], dv_rows={}, dropped_names=[],
                     phys={}, spark=spark,
                 )
                 break
@@ -1088,7 +1072,7 @@ def lake_write(
             # conflict, not be silently overwritten by the stale plan
             require_meta={
                 k: head_info.get(k)
-                for k in ("schema", "renames", "dropped_names", "phys")
+                for k in ("schema", "dropped_names", "phys")
             }
             if (schema_json is not None or evolved_phys is not None) and live
             else None,
@@ -1112,17 +1096,9 @@ def _read_record(
     """The rows of one committed record of a ref (main or ``branch``)."""
     files = sorted(info["files"])
     if not files:
-        # empty table: the commit record carries the authoritative
-        # schema (round 12) — on-disk leftovers may be vacuumed away
-        # entirely, or a dead pre-evolution file could supply a stale
-        # column set
-        if info.get("schema"):
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame([], StructType.fromJson(json.loads(info["schema"])))
-        # pre-round-12 commit without a schema leg: best-effort from
-        # whatever parquet remains on disk
-        return spark.read.parquet(path).limit(0)
+        # empty table: the record's schema, never on-disk leftovers
+        # (vacuumed away, or a dead pre-evolution column set)
+        return spark.createDataFrame([], _record_schema(path, info))
     missing = [n for n in files if not os.path.exists(os.path.join(path, n))]
     if missing:
         raise ValueError(
@@ -1133,10 +1109,37 @@ def _read_record(
     return _read_files(spark, path, files, info)
 
 
+def _record_schema(path: str, info: dict):
+    """The table schema a commit record states (a ``StructType``).
+    Every commit writes one; a record without it raises, naming the
+    ref and version — nothing guesses a schema."""
+    from pyspark.sql.types import StructType
+
+    if not info.get("schema"):
+        fork = info.get("fork_version")
+        ref = f"branch (forked at main v{fork})" if fork else "main"
+        raise ValueError(
+            f"{ref} snapshot v{info.get('version')} of {path!r} records no schema"
+        )
+    return StructType.fromJson(json.loads(info["schema"]))
+
+
+def _adopt_schema(spark: SparkSession, path: str, files: list[str]):
+    """The schema a lake's first commit records when it adopts plain
+    parquet ``files``: their merge-read schema (partition columns
+    included)."""
+    return (
+        spark.read.option("basePath", path)
+        .option("mergeSchema", "true")
+        .parquet(*[os.path.join(path, n) for n in files])
+        .schema
+    )
+
+
 def _dv_df(spark: SparkSession, path: str, info: dict | None) -> DataFrame | None:
-    """The union of a commit's deletion-vector sidecars: (file
-    basename, pos) rows masking deleted positions. None when the
-    commit carries no DVs."""
+    """The union of a commit's deletion-vector sidecars: (file, pos)
+    rows masking deleted positions, ``file`` relative to the lake.
+    None when the commit carries no DVs."""
     names = (info or {}).get("dvs") or []
     if not names:
         return None
@@ -1154,97 +1157,59 @@ def _read_files(
     spark: SparkSession,
     path: str,
     names: list[str],
-    info: dict | None = None,
+    info: dict,
     _keep_position_cols: bool = False,
 ) -> DataFrame:
     """Read RELATIVE file ``names`` under the authority of a commit
     record's schema (round 12 — the reader half of full schema
     evolution):
 
-    * the read schema is EXPLICIT (recorded fields + each rename's
-      prior names typed at the target), so planning reads ZERO footers
-      — no mergeSchema job — and parquet's type promotion surfaces
+    * the read schema is EXPLICIT, so planning reads ZERO footers — no
+      mergeSchema job — and parquet's type promotion surfaces
       pre-widen INT32/FLOAT files at the recorded wider type;
     * files missing a column (pre-ADD) read NULL for it; columns a
       file carries beyond the schema (post-DROP leftovers) never
       surface;
-    * renamed columns resolve by COALESCE over the name lineage —
-      sound because a file carries exactly one generation of the name.
+    * column mapping (round 14): a field named in the record's
+      ``phys`` map reads from that PHYSICAL parquet column, so a
+      reused logical name (fresh physical) never touches old files'
+      dead bytes, and a rename (physical unchanged) reads every
+      generation from one column.
 
     Deletion vectors (round 12): when the record carries ``dvs``, the
-    read masks DV'd positions with a (file basename, row_index)
+    read masks DV'd positions with a (lake-relative file, row_index)
     anti-join — broadcast when the recorded deleted-row total is under
     ``_DV_BROADCAST_CAP``, plain shuffle above. ``_keep_position_cols``
-    keeps ``__file``/``__pos`` in the output (the DV writers' hook).
-
-    With no usable record (plain dirs, pre-round-12 logs, adopt
-    commits) this falls back to the mergeSchema read — the round-11
-    behavior, unchanged (DV masking still applies if present)."""
-    paths = [os.path.join(path, n) for n in names]
-    dv = _dv_df(spark, path, info)
-    want_pos = _keep_position_cols or dv is not None
-
-    def mask(df: DataFrame) -> DataFrame:
-        # position columns from the parquet reader's own metadata —
-        # stable per file, no shuffle, no row numbering job
-        if not want_pos:
-            return df
-        out = df.withColumn(
-            "__file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        ).withColumn("__pos", F.col("_metadata.row_index"))
-        if dv is not None:
-            total = sum((info or {}).get("dv_rows", {}).values())
-            right = F.broadcast(dv) if total <= _DV_BROADCAST_CAP else dv
-            out = out.join(
-                right,
-                (out["__file"] == right["file"]) & (out["__pos"] == right["pos"]),
-                "left_anti",
-            )
-        return out if _keep_position_cols else out.drop("__file", "__pos")
-
-    sj = (info or {}).get("schema")
-    if not sj:
-        return mask(
-            spark.read.option("basePath", path)
-            .option("mergeSchema", "true")
-            .parquet(*paths)
-        )
+    keeps ``__file``/``__pos`` in the output (the DV writers' hook)."""
     from pyspark.sql.types import StructField, StructType
 
-    fields = StructType.fromJson(json.loads(sj))
-    renames: dict[str, list[str]] = (info or {}).get("renames") or {}
-    # column mapping (round 14): a field whose name appears in the
-    # record's "phys" map stores under that PHYSICAL parquet name —
-    # the read schema and the resolve both go through the map, so a
-    # reused logical name (fresh physical) never touches old files'
-    # dead bytes, and a pure-metadata rename (physical stays the
-    # original) reads every generation from one physical column.
-    phys: dict[str, str] = (info or {}).get("phys") or {}
-    read_fields = []
-    have: set[str] = set()
-    for f in fields.fields:
-        p = phys.get(f.name, f.name)
-        read_fields.append(StructField(p, f.dataType, True))
-        have.add(p)
-    for tgt, olds in renames.items():
-        if tgt not in fields.names:
-            continue  # lineage of a since-dropped column: nothing to read
-        t = fields[tgt].dataType
-        for o in olds:
-            if o not in have:
-                read_fields.append(StructField(o, t, True))
-                have.add(o)
-    df = mask(
-        spark.read.schema(StructType(read_fields))
+    from .layout import _relpath_col
+
+    fields = _record_schema(path, info).fields
+    phys: dict[str, str] = info.get("phys") or {}
+    df = (
+        spark.read.schema(
+            StructType([StructField(phys.get(f.name, f.name), f.dataType) for f in fields])
+        )
         .option("basePath", path)
-        .parquet(*paths)
+        .parquet(*[os.path.join(path, n) for n in names])
     )
-    proj = []
-    for f in fields.fields:
-        cands = [phys.get(f.name, f.name)]
-        cands += [o for o in renames.get(f.name, []) if o not in cands]
-        expr = F.col(cands[0]) if len(cands) == 1 else F.coalesce(*[F.col(c) for c in cands])
-        proj.append(expr.cast(f.dataType).alias(f.name))
+    dv = _dv_df(spark, path, info)
+    if _keep_position_cols or dv is not None:
+        # position columns from the parquet reader's own metadata —
+        # stable per file, no shuffle, no row numbering job
+        df = df.withColumn("__file", _relpath_col(path)).withColumn(
+            "__pos", F.col("_metadata.row_index")
+        )
+    if dv is not None:
+        total = sum(info.get("dv_rows", {}).values())
+        right = F.broadcast(dv) if total <= _DV_BROADCAST_CAP else dv
+        df = df.join(
+            right,
+            (df["__file"] == right["file"]) & (df["__pos"] == right["pos"]),
+            "left_anti",
+        )
+    proj = [F.col(phys.get(f.name, f.name)).alias(f.name) for f in fields]
     if _keep_position_cols:
         proj += [F.col("__file"), F.col("__pos")]
     return df.select(*proj)
@@ -1273,10 +1238,9 @@ def lake_rollback(path: str, version: int) -> int:
         summary={"restored_version": version},
         parent=head,
         schema_json=info.get("schema"),
-        # restore the target's rename lineage and deletion vectors too
+        # restore the target's evolution state and deletion vectors too
         # (empty values BLOCK inheriting the abandoned head's — a
         # rollback past a DV delete must unmask those rows)
-        renames=info.get("renames") or {},
         dvs=info.get("dvs") or [],
         dv_rows=info.get("dv_rows") or {},
         dropped_names=info.get("dropped_names") or [],
@@ -1289,10 +1253,10 @@ def lake_rollback(path: str, version: int) -> int:
 # commits. The commit record's schema is authoritative for every read
 # (_read_files), so dropping, renaming, or widening a column touches
 # ZERO data bytes: old files keep their physical layout and the reader
-# resolves them — dropped columns never surface, renamed columns
-# coalesce over their name lineage, narrowed files promote to the
-# recorded wider type (parquet type promotion, proven by test). Time
-# travel to a pre-evolution version reads THAT version's schema.
+# resolves them — dropped columns never surface, renamed columns read
+# through the column mapping, narrowed files promote to the recorded
+# wider type (parquet type promotion, proven by test). Time travel to
+# a pre-evolution version reads THAT version's schema.
 # ---------------------------------------------------------------------------
 
 # provable-lossless integer/float promotions (Iceberg's widen set)
@@ -1308,28 +1272,20 @@ def _schema_commit(
     path: str, op: str, mutate, summary: dict, branch: str | None = None
 ) -> int:
     """Shared tail of the ALTER ops: read the ref's head recorded
-    schema + rename lineage + dropped-name tombstones, apply
-    ``mutate(schema, renames, dropped) -> (schema, renames, dropped)``,
+    schema + dropped-name tombstones + column mapping, apply
+    ``mutate(schema, dropped, phys) -> (schema, dropped, phys)``,
     commit the SAME file list with the new metadata (parent-asserted —
     a concurrent commit raises, the caller re-decides). ``branch``
     (round 13 — DDL ON BRANCHES): the ALTER lands on the branch ref;
     main never sees it until publish, which carries the evolved schema
     forward when main's own schema never moved (and raises when both
     evolved)."""
-    from pyspark.sql.types import StructType
-
     info = snapshot_info(path, branch=branch)
-    sj = info.get("schema")
-    if not sj:
-        raise ValueError(
-            "the head commit carries no recorded schema (pre-round-12 log or "
-            "adopt commit) — run lake_record_schema(spark, path) once first"
-        )
-    schema = StructType.fromJson(json.loads(sj))
-    renames = {k: list(v) for k, v in (info.get("renames") or {}).items()}
-    dropped = list(info.get("dropped_names") or [])
-    phys = dict(info.get("phys") or {})
-    schema, renames, dropped, phys = mutate(schema, renames, dropped, phys)
+    schema, dropped, phys = mutate(
+        _record_schema(path, info),
+        list(info.get("dropped_names") or []),
+        dict(info.get("phys") or {}),
+    )
     if branch is not None:
         summary = {"branch": branch, **summary}
     return commit_snapshot(
@@ -1339,7 +1295,6 @@ def _schema_commit(
         summary=summary,
         parent=info["version"],
         schema_json=schema.json(),
-        renames=renames,
         dropped_names=dropped,
         phys=phys,
         branch=branch,
@@ -1347,30 +1302,21 @@ def _schema_commit(
 
 
 def _reuse_blocked_names(info: dict) -> set[str]:
-    """Column names that must NOT be (re)introduced at the head: every
-    rename-lineage alias (old files still carry bytes under them — a
-    new column with that name would absorb them through the resolve
-    coalesce) and every dropped-name tombstone (old files still carry
-    the dropped bytes — a new column with that name would resurface
-    them wholesale). Round 13, VERDICT r12 'What's wrong #1'. Reuse
-    requires a full rewrite: a truncating ``lake_write(...,
-    mode="overwrite")`` clears both sets (every live file is then the
-    commit's own)."""
-    blocked: set[str] = set(info.get("dropped_names") or [])
-    for olds in (info.get("renames") or {}).values():
-        blocked.update(olds)
-    # column mapping (round 14): every physical name in use is burned
-    # too — a new column whose DEFAULT physical name (itself) is
-    # burned gets a fresh allocation instead
-    blocked.update((info.get("phys") or {}).values())
-    return blocked
+    """Physical column names a new column must NOT store under: every
+    dropped-name tombstone (old files still carry the dropped bytes —
+    a new column stored there would resurface them) and every physical
+    name in use (round 14 column mapping). A new column whose default
+    physical name (itself) is burned gets a fresh allocation instead.
+    A truncating ``lake_write(..., mode="overwrite")`` clears both sets
+    (every live file is then the commit's own)."""
+    return set(info.get("dropped_names") or []) | set((info.get("phys") or {}).values())
 
 
 def _alloc_phys(name: str, burned: set[str]) -> str:
     """A fresh PHYSICAL parquet column name for a reused logical
     ``name`` (round 14 — column mapping): ``<name>__g2``, ``__g3``, …
     — the first generation suffix not in ``burned`` (every dropped
-    name, lineage alias, live physical name, and incoming column).
+    name, live physical name, and incoming column).
     Deterministic, so concurrent allocators that later conflict on the
     commit still agree on what they tried."""
     k = 2
@@ -1379,55 +1325,31 @@ def _alloc_phys(name: str, burned: set[str]) -> str:
     return f"{name}__g{k}"
 
 
-def lake_record_schema(spark: SparkSession, path: str) -> int:
-    """Bootstrap the authoritative-schema leg on a log whose head
-    predates it (adopt commits, pre-round-12 logs): commit the current
-    file list unchanged with the resolved (merge-read) schema."""
-    head = current_version(path)
-    if head is None:
-        raise ValueError(f"{path!r} is not a snapshot lake (no commits)")
-    info = snapshot_info(path, head)
-    if info.get("schema"):
-        return head  # already recorded — no-op, no empty commit
-    schema = _read_files(spark, path, sorted(info["files"]), None).schema
-    return commit_snapshot(
-        path, info["files"], "record_schema", parent=head, schema_json=schema.json()
-    )
-
-
 def lake_drop_column(path: str, col: str, branch: str | None = None) -> int:
     """ALTER TABLE DROP COLUMN as a metadata commit: the column leaves
     the recorded schema; its bytes stay in the old files (time travel
     still reads them) but no head read surfaces it. Appends after the
     drop carry the narrowed schema.
 
-    The dropped column's PHYSICAL name — and every rename-lineage
-    alias it carried — lands in the commit's ``dropped_names``
-    tombstones (round 13). Round 14 (column mapping): re-adding a
-    column under a tombstoned name is LEGAL and safe — the evolution
-    paths allocate a fresh physical name for it, so the dead bytes
-    never resurface; the tombstones now serve as the burned-name set
-    behind that allocation rather than a rejection list. To truly
+    The dropped column's PHYSICAL name lands in the commit's
+    ``dropped_names`` tombstones (round 13). Round 14 (column
+    mapping): re-adding a column under a tombstoned name is LEGAL and
+    safe — the evolution paths allocate a fresh physical name for it,
+    so the dead bytes never resurface; the tombstones serve as the
+    burned-name set behind that allocation. To truly
     erase the bytes (PII removal), follow the drop with a full
     rewrite (OPTIMIZE / truncating overwrite) then ``vacuum_lake``."""
     from pyspark.sql.types import StructType
 
-    def mutate(schema, renames, dropped, phys):
+    def mutate(schema, dropped, phys):
         if col not in schema.names:
             raise ValueError(f"no column {col!r}; schema has {schema.names}")
         if len(schema.fields) == 1:
             raise ValueError("cannot drop the table's only column")
         # old files carry the bytes under the column's PHYSICAL name —
         # that is what must never be reused as a default physical
-        dropped = sorted(
-            set(dropped) | {phys.pop(col, col)} | set(renames.pop(col, []))
-        )
-        return (
-            StructType([f for f in schema.fields if f.name != col]),
-            renames,
-            dropped,
-            phys,
-        )
+        dropped = sorted(set(dropped) | {phys.pop(col, col)})
+        return StructType([f for f in schema.fields if f.name != col]), dropped, phys
 
     return _schema_commit(path, "drop_column", mutate, {"column": col}, branch=branch)
 
@@ -1438,14 +1360,12 @@ def lake_rename_column(path: str, old: str, new: str, branch: str | None = None)
     physical parquet name stays whatever it always was (``phys[new] =
     phys.get(old, old)``), so files written before AND after the
     rename store the same physical column and the reader resolves
-    them identically; no per-generation coalesce is needed for new
-    renames (pre-round-14 lineage entries still resolve through the
-    legacy coalesce, transferred to the new name here). Renaming onto
-    a tombstoned or lineage-burned name is safe — the target name is
-    only a label; nothing is ever read under it physically."""
+    them identically. Renaming onto a tombstoned name is safe — the
+    target name is only a label; nothing is ever read under it
+    physically."""
     from pyspark.sql.types import StructField, StructType
 
-    def mutate(schema, renames, dropped, phys):
+    def mutate(schema, dropped, phys):
         if old not in schema.names:
             raise ValueError(f"no column {old!r}; schema has {schema.names}")
         if new in schema.names:
@@ -1459,10 +1379,7 @@ def lake_rename_column(path: str, old: str, new: str, branch: str | None = None)
             ]
         )
         phys[new] = phys.pop(old, old)
-        olds = renames.pop(old, [])
-        if olds:
-            renames[new] = olds  # legacy lineage follows the label
-        return out, renames, dropped, phys
+        return out, dropped, phys
 
     return _schema_commit(path, "rename_column", mutate, {"from": old, "to": new}, branch=branch)
 
@@ -1490,7 +1407,7 @@ def lake_widen_column(path: str, col: str, new_type: str, branch: str | None = N
         "double": DoubleType(),
     }
 
-    def mutate(schema, renames, dropped, phys):
+    def mutate(schema, dropped, phys):
         if col not in schema.names:
             raise ValueError(f"no column {col!r}; schema has {schema.names}")
         cur = schema[col].dataType.simpleString()
@@ -1506,7 +1423,7 @@ def lake_widen_column(path: str, col: str, new_type: str, branch: str | None = N
                 for f in schema.fields
             ]
         )
-        return out, renames, dropped, phys
+        return out, dropped, phys
 
     return _schema_commit(
         path, "widen_column", mutate, {"column": col, "to": new_type}, branch=branch
@@ -1725,7 +1642,9 @@ def _lake_file_stats(
     live = files if files is not None else _data_files(path)
     if scan_manifest is None or spark is None or not cols:
         return file_stats(path, cols, live)
-    mf = spark.read.option("mergeSchema", "true").parquet(scan_manifest)
+    from .layout import _read_scan_manifest
+
+    mf = _read_scan_manifest(spark, scan_manifest)
     by_file: dict[str, dict] = {}
     rows_by_file: dict[str, int] = {}
     for r in mf.filter(F.col("col").isin(list(cols))).collect():
@@ -1734,8 +1653,7 @@ def _lake_file_stats(
         if r.lo is not None and r.hi is not None:
             d["min"][r.col] = float(r.lo)
             d["max"][r.col] = float(r.hi)
-        nc = getattr(r, "nulls", None) if "nulls" in mf.columns else None
-        d["nulls"][r.col] = int(nc) if nc is not None else None
+        d["nulls"][r.col] = int(r.nulls) if r.nulls is not None else None
     known = set(rows_by_file)
     out = [
         {"file": n, "rows": rows_by_file[n], **by_file[n]}
@@ -1867,7 +1785,7 @@ def lake_delete(
     and audited BEFORE publish, instead of published-then-fixed. Main
     never sees the intermediate states; publish carries the branch's
     file changes (and DV deltas) through the usual protocol."""
-    head_info = _dml_head(path, branch)
+    head_info = _dml_head(spark, path, branch)
     head = head_info["version"]
     live = sorted(head_info["files"])
     drop, keep, rewrite = _classify_for_delete(
@@ -1909,9 +1827,6 @@ def lake_delete(
         # merged into whatever head the commit lands on — a concurrent
         # DV delete's sidecars survive the rebase instead of being
         # overwritten by this plan's stale absolute list (ADVICE r12 #1)
-        masked = {
-            n for n in rewrite if os.path.basename(n) in dv_per_file
-        }
         n_kept = len(keep) + len(rewrite) - len(dv_per_file)
         version = _commit_filechange(
             path,
@@ -1928,7 +1843,7 @@ def lake_delete(
             },
             dv_add=new_sidecars,
             dv_rows_add=dv_per_file,
-            masked_files=masked,
+            masked_files=set(dv_per_file),
             planned_dv_rows=prev_dv_rows,
             dv_files_add={s: sorted(dv_per_file) for s in new_sidecars},
             spark=spark,
@@ -2021,16 +1936,9 @@ def lake_merge(
     guess)."""
     if when_matched not in ("update", "delete"):
         raise ValueError(f"when_matched must be 'update' or 'delete', got {when_matched!r}")
-    head_info = _dml_head(path, branch)
+    head_info = _dml_head(spark, path, branch)
     head, live = head_info["version"], sorted(head_info["files"])
-    # the CURRENT snapshot's merged schema — a whole-dir read could
-    # adopt a dead pre-evolution footer's column set and false-flag
-    # schema drift after an evolution commit
-    lake_schema = set(
-        _read_files(spark, path, live, head_info).columns
-        if live
-        else _read_record(spark, path, head_info, branch).columns
-    )
+    lake_schema = set(_record_schema(path, head_info).names)
     if when_matched == "update" and set(source.columns) != lake_schema:
         raise ValueError(
             f"merge source columns {sorted(source.columns)} != lake columns "
@@ -2166,16 +2074,13 @@ def _read_changes_infos(
     files_to = set(info_to["files"])
     added = sorted(files_to - files_from)
     removed = sorted(files_from - files_to)
-    schema_src = added or removed or sorted(files_to | files_from)
-    if not schema_src:
-        raise ValueError("both snapshots are empty — no schema source")
 
-    # both sides read under the NEWER version's recorded schema when it
-    # has one: a rename's lineage folds old files' columns into the new
-    # names, so CDC across a rename boundary compares like-for-like; a
-    # drop's column disappears from both sides (it can no longer cause
-    # a phantom change). Pre-round-12 records fall back to a
-    # mergeSchema read + column union below. Each side masks ITS OWN
+    # every leg reads under the NEWER version's recorded schema: a
+    # rename's mapping resolves old files under the new names, so CDC
+    # across a rename boundary compares like-for-like; a drop's column
+    # disappears from both sides (it can no longer cause a phantom
+    # change); a pre-ADD file reads NULL for the added column, so rows
+    # that differ only there net correctly. Each side masks ITS OWN
     # version's deletion vectors — added files under v_to's, removed
     # files under v_from's (their live rows at that version).
     info_from_read = {
@@ -2201,12 +2106,11 @@ def _read_changes_infos(
             empty = spark.createDataFrame([], "file string, pos long")
             dv_f = dv_f if dv_f is not None else empty
             dv_t = dv_t if dv_t is not None else empty
-            base_by_name = {os.path.basename(n): n for n in shared}
             new_pos = dv_t.join(dv_f, ["file", "pos"], "left_anti").filter(
-                F.col("file").isin(list(base_by_name))
+                F.col("file").isin(sorted(shared))
             )
             back_pos = dv_f.join(dv_t, ["file", "pos"], "left_anti").filter(
-                F.col("file").isin(list(base_by_name))
+                F.col("file").isin(sorted(shared))
             )
 
             def dv_rows_for(pos_df: DataFrame) -> DataFrame | None:
@@ -2216,7 +2120,7 @@ def _read_changes_infos(
                 rows = _read_files(
                     spark,
                     path,
-                    sorted(base_by_name[n] for n in names),
+                    sorted(names),
                     {**info_to, "dvs": None, "dv_rows": None},
                     _keep_position_cols=True,
                 )
@@ -2229,9 +2133,6 @@ def _read_changes_infos(
 
             dv_delta_del = dv_rows_for(new_pos)
             dv_delta_ins = dv_rows_for(back_pos)
-    # union of columns across every leg, NULL-filled where absent: a
-    # pre-evolution removed file diffs as NULL on the added column, so
-    # rows that differ only there net correctly instead of cancelling
     legs = [
         (df, sign)
         for df, sign in (
@@ -2242,36 +2143,19 @@ def _read_changes_infos(
         )
         if df is not None
     ]
-    cols: list[str] = []
-    dtypes: dict[str, str] = {}
-    for df, _sign in legs:
-        for c, t in df.dtypes:
-            if c not in dtypes:
-                cols.append(c)
-                dtypes[c] = t
-
-    def load(df: DataFrame, sign: int) -> DataFrame:
-        have = set(df.columns)
-        proj = [
-            F.col(c) if c in have else F.lit(None).cast(dtypes[c]).alias(c)
-            for c in cols
-        ]
-        return df.select(*proj).groupBy(*cols).agg(
-            (F.count(F.lit(1)) * sign).alias("__d")
-        )
-
-    if legs:
-        net = load(*legs[0])
-        for df, sign in legs[1:]:
-            net = net.unionByName(load(df, sign))
-    else:
+    schema = _record_schema(path, info_to)
+    cols = schema.names
+    if not legs:
         # identical file sets, identical masks: nothing changed
-        empty = _read_files(spark, path, [schema_src[0]], info_to).limit(0)
-        return empty.select(
-            *empty.columns,
+        return spark.createDataFrame([], schema).select(
+            *cols,
             F.lit("insert").alias("__change"),
             F.lit(0).cast("long").alias("__n"),
-        ).limit(0)
+        )
+    net = None
+    for df, sign in legs:
+        d = df.groupBy(*cols).agg((F.count(F.lit(1)) * sign).alias("__d"))
+        net = d if net is None else net.unionByName(d)
     return (
         net.groupBy(*cols)
         .agg(F.sum("__d").alias("__net"))
@@ -2297,12 +2181,7 @@ def snapshot_row_count(path: str, version: int | str | None = None) -> int | Non
         return None
     dvr = info.get("dv_rows") or {}
     try:
-        # dv_rows is keyed by file BASENAME (the reader's __file key);
-        # fall through to it for hive-partitioned relative names
-        return sum(
-            int(rows[n]) - int(dvr.get(n, dvr.get(os.path.basename(n), 0)))
-            for n in info["files"]
-        )
+        return sum(int(rows[n]) - int(dvr.get(n, 0)) for n in info["files"])
     except KeyError:
         return None
 
@@ -2343,12 +2222,16 @@ def lake_stats(path: str) -> dict:
     }
 
 
-def _dml_head(path: str, branch: str | None) -> dict:
+def _dml_head(spark: SparkSession, path: str, branch: str | None) -> dict:
     """The head record a DML op plans against on its ref. The first
     DML on a plain parquet directory adopts it: main v1 = the files
-    as-is."""
+    as-is, under their merge-read schema."""
     if not branch and not has_snapshots(path):
-        commit_snapshot(path, _data_files(path), "adopt", parent=0)
+        files = _data_files(path)
+        commit_snapshot(
+            path, files, "adopt", parent=0,
+            schema_json=_adopt_schema(spark, path, files).json(),
+        )
     return snapshot_info(path, branch=branch)
 
 
@@ -2363,9 +2246,9 @@ def _maintain_manifest(
     MAIN's live set, so a commit on a branch leaves it alone."""
     if scan_manifest is None or branch:
         return
-    from .layout import append_scan_manifest, compact_scan_manifest
+    from .layout import _read_scan_manifest, append_scan_manifest, compact_scan_manifest
 
-    mf = spark.read.option("mergeSchema", "true").parquet(scan_manifest)
+    mf = _read_scan_manifest(spark, scan_manifest)
     cols = [r.col for r in mf.select("col").distinct().collect()]
     compact_scan_manifest(spark, path, scan_manifest)
     if cols:
@@ -2395,7 +2278,7 @@ def lake_update(
 
     ``branch`` (round 13): apply the update on a WAP branch's head —
     same pruning, committed on the branch ref (see lake_delete)."""
-    head_info = _dml_head(path, branch)
+    head_info = _dml_head(spark, path, branch)
     head = head_info["version"]
     allmatch, keep, boundary = _classify_for_delete(
         path, predicate, col_types, spark, scan_manifest,
@@ -2522,7 +2405,7 @@ def lake_branches(path: str) -> dict[str, dict]:
 
 def lake_branch_create(path: str, name: str, from_version: int | str | None = None) -> int:
     """Fork a branch at a main version (head when None): one metadata
-    record copying the fork's file list / schema / lineage. Staged
+    record copying the fork's file list and metadata legs. Staged
     work lands on the branch; main never sees it until publish."""
     if _versions(path, name):
         raise ValueError(f"branch {name!r} already exists")
@@ -2554,17 +2437,8 @@ def lake_branch_append(spark: SparkSession, path: str, name: str, df: DataFrame)
     Schema must match the branch head's (staging is not the place for
     silent drift)."""
     head_info = snapshot_info(path, branch=name)
-    # read one committed branch file set's schema authority
-    cur_cols = None
-    if head_info.get("schema"):
-        from pyspark.sql.types import StructType
-
-        cur_cols = set(StructType.fromJson(json.loads(head_info["schema"])).names)
-    elif head_info["files"]:
-        cur_cols = set(
-            _read_files(spark, path, sorted(head_info["files"]), head_info).columns
-        )
-    if cur_cols is not None and set(df.columns) != cur_cols:
+    cur_cols = set(_record_schema(path, head_info).names)
+    if set(df.columns) != cur_cols:
         raise ValueError(
             f"branch {name!r} schema drift: write has {sorted(set(df.columns) - cur_cols) or '-'} "
             f"extra / {sorted(cur_cols - set(df.columns)) or '-'} missing"
@@ -2678,19 +2552,15 @@ def lake_publish_branch(
     br_dvr = info.get("dv_rows") or {}
     dv_add = [s for s in (info.get("dvs") or []) if s not in fork_dvs]
     dv_rows_add = {
-        b: int(n) - int(fork_dvr.get(b, 0))
-        for b, n in br_dvr.items()
-        if int(n) - int(fork_dvr.get(b, 0)) > 0
+        f: int(n) - int(fork_dvr.get(f, 0))
+        for f, n in br_dvr.items()
+        if int(n) - int(fork_dvr.get(f, 0)) > 0
     }
-    masked = {
-        n
-        for n in branch_files
-        if os.path.basename(n) in dv_rows_add
-    }
+    masked = branch_files & set(dv_rows_add)
     has_dv_delta = bool(dv_add or dv_rows_add)
     # schema (round 13 — DDL on branches): when the BRANCH evolved its
     # schema in staging (vs its fork state), publish carries the
-    # evolved schema + lineage + tombstones to main, guarded by
+    # evolved schema + tombstones + mapping to main, guarded by
     # require_schema= — if main's own schema moved since the fork too,
     # that is a REAL schema-evolution conflict and the publish raises
     # (merging two evolutions is the operator's call, never a silent
@@ -2699,7 +2569,7 @@ def lake_publish_branch(
     # published files read under main's newer schema (absent columns
     # NULL) instead of silently reverting.
     fork_schema = fork_info.get("schema")
-    evolved = info.get("schema") is not None and info.get("schema") != fork_schema
+    evolved = info.get("schema") != fork_schema
     br_dv_files = info.get("dv_files") or {}
     version = _commit_filechange(
         path,
@@ -2716,7 +2586,6 @@ def lake_publish_branch(
         if has_dv_delta
         else None,
         schema_json=info.get("schema") if evolved else None,
-        renames=(info.get("renames") or {}) if evolved else None,
         dropped_names=(info.get("dropped_names") or []) if evolved else None,
         phys=(info.get("phys") or {}) if evolved else None,
         require_schema=fork_schema if evolved else None,
@@ -2745,7 +2614,7 @@ def lake_branch_compact(
 
     Selection is METADATA-ONLY (the branch record's own file_rows);
     the rewrite reads through ``_read_files`` with the branch record,
-    so deletion-vector masks MATERIALIZE and schema lineage resolves —
+    so deletion-vector masks MATERIALIZE and the schema resolves —
     exactly like main-chain DML rewrites. Commits through
     ``_commit_filechange`` on the branch ref (a concurrent branch
     commit that touched a selected file raises). Fork-shared files are compacted like any

@@ -608,6 +608,7 @@ def lake_append_stream(
     import os
 
     from ..operators.layout import (
+        _read_scan_manifest,
         append_bloom_manifest,
         append_scan_manifest,
         optimize_clustered,
@@ -616,7 +617,7 @@ def lake_append_stream(
     def _derived_specs(spark) -> list[tuple[str, int, int]]:
         from pyspark.sql import functions as F
 
-        mf = spark.read.option("mergeSchema", "true").parquet(box_manifest_path)
+        mf = _read_scan_manifest(spark, box_manifest_path)
         rows = (
             mf.filter(F.col("col").isin(stat_cols))
             .groupBy("col")
@@ -841,19 +842,22 @@ def lake_snapshot_stream(
             return
         if not has_snapshots(lake_path):
             # establish v1 BEFORE writing any batch file (round 12,
-            # ADVICE fix): pre-existing plain parquet adopts; an empty
-            # dir commits an empty init. Either way the first batch's
+            # ADVICE fix): pre-existing plain parquet adopts under its
+            # merge-read schema; an empty dir commits an empty init
+            # under the batch's schema. Either way the first batch's
             # files are written AFTER a snapshot exists, so a crash
             # between write and commit leaves orphans the retry never
             # adopts (the old code re-listed the dir and committed the
             # first attempt's files PLUS the rewrite — duplicate rows).
             from ..operators.layout import _data_files
-            from ..operators.snapshots import SnapshotConflictError
+            from ..operators.snapshots import SnapshotConflictError, _adopt_schema
 
             pre = _data_files(lake_path)
+            schema = _adopt_schema(spark, lake_path, pre) if pre else batch_df.schema
             try:
                 commit_snapshot(
-                    lake_path, pre, "adopt" if pre else "stream_init", parent=0
+                    lake_path, pre, "adopt" if pre else "stream_init", parent=0,
+                    schema_json=schema.json(),
                 )
             except SnapshotConflictError:
                 pass  # another writer initialized first — fine

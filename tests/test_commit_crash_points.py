@@ -156,6 +156,15 @@ def _visible(spark, lake) -> dict:
     return out
 
 
+def _assert_record_shape(lake) -> None:
+    """Every record of every ref carries the table schema and no
+    rename lineage."""
+    for ref, v in S._ref_versions(lake, S._versions(lake)):
+        info = snapshot_info(lake, v, branch=ref)
+        assert info.get("schema"), (ref, v)
+        assert "renames" not in info, (ref, v)
+
+
 def _assert_records_resolve(lake) -> None:
     """Every file any record of any ref names exists on disk."""
     snap = S._snap_dir(lake)
@@ -205,6 +214,7 @@ def test_crash_at_every_commit_step(spark, base_lake, tmp_path, name):
         else:
             assert _visible(spark, lake) == twin, n
         _assert_records_resolve(lake)
+        _assert_record_shape(lake)
     else:
         pytest.fail(f"{name} still hit the fault after 8 mutating calls")
     assert crashes >= 1

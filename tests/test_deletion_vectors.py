@@ -280,10 +280,10 @@ def test_dv_mask_aware_metadata_count_fast_path(spark, tmp_path):
 
 
 def test_dv_on_hive_partitioned_lake(spark, tmp_path):
-    """Round 13: dv_rows is keyed by file BASENAME while a partitioned
-    lake's live list carries directory-relative names — the metadata
-    row count must subtract through the basename fallback, and reads
-    must mask correctly across partition dirs."""
+    """Masks and dv_rows are keyed by the lake-relative file name the
+    live list uses: one write task puts the same part-file basename
+    into every ``p=`` dir, so the metadata row count and the reads
+    must mask only the file the delete hit, never its namesakes."""
     from mlb_data_pipeline_spark.operators.snapshots import snapshot_row_count
 
     lake = str(tmp_path / "lake")
@@ -304,3 +304,24 @@ def test_dv_on_hive_partitioned_lake(spark, tmp_path):
     assert snapshot_row_count(lake) == 350
     # time travel: unmasked
     assert read_snapshot(spark, lake, 1).count() == 400
+
+
+def test_dv_keys_match_escaped_partition_dirs(spark, tmp_path):
+    """Hive-escaped partition dirs (``a:b`` lives in ``p=a%3Ab``) under
+    a lake path holding a space and a ``+``: the scan reports each file
+    as a percent-encoded URI, and the mask key must still be the live
+    list's relative name."""
+    lake = str(tmp_path / "dv lake+x")
+    vals = F.array(F.lit("a:b"), F.lit("c d+e%f"), F.lit("ü/x"))
+    df = spark.range(0, 300).select(
+        F.col("id").alias("k"),
+        F.element_at(vals, (F.col("id") % 3 + 1).cast("int")).alias("p"),
+    )
+    lake_write(spark, df, lake, partition_by=["p"])
+    lake_delete(
+        spark, lake, "k BETWEEN 100 AND 149", col_types={"k": "bigint"}, use_dv=True
+    )
+    assert set(snapshot_info(lake)["dv_rows"]) <= set(S.snapshot_files(lake))
+    cur = read_snapshot(spark, lake)
+    assert cur.count() == 250 and cur.filter("k BETWEEN 100 AND 149").count() == 0
+    assert snapshot_row_count(lake) == 250

@@ -3,12 +3,16 @@
 Round 11 gated evolution to ADD-only. The round-12 commit record
 carries the authoritative table schema, which makes the rest of ALTER
 TABLE pure metadata: ``lake_drop_column`` (bytes stay, reads never
-surface it), ``lake_rename_column`` (a name-lineage map resolves every
-file generation by coalesce — no column IDs needed, each file carries
-exactly one generation), ``lake_widen_column`` (lossless promotions
+surface it), ``lake_rename_column`` (a relabel through the column
+mapping: every file generation reads one physical column),
+``lake_widen_column`` (lossless promotions
 only; narrow files promote at read via parquet type promotion, proven
 in-suite). Zero data files rewritten by any of them — pinned by mtime.
-Time travel to a pre-evolution version reads THAT version's schema."""
+Time travel to a pre-evolution version reads THAT version's schema.
+
+Every commit records its schema: a lake's first commit (a write, or
+the adoption of a plain parquet dir) records it, and a record without
+one is an error, never a guess."""
 
 from __future__ import annotations
 
@@ -18,10 +22,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from mlb_data_pipeline_spark.operators.snapshots import (
+    commit_snapshot,
     lake_delete,
     lake_drop_column,
     lake_merge,
-    lake_record_schema,
     lake_rename_column,
     lake_rollback,
     lake_widen_column,
@@ -174,18 +178,71 @@ def test_merge_after_evolution(spark, tmp_path):
     assert cur.filter("k < 30").filter(F.col("w") != F.col("k") * 2).count() == 0
 
 
-def test_record_schema_bootstraps_adopted_lake(spark, tmp_path):
+def test_drop_column_on_adopted_lake_needs_no_bootstrap(spark, tmp_path):
     lake = str(tmp_path / "lake")
     _df(spark, 0, 20).coalesce(1).write.parquet(lake)  # plain dir
-    # first DML adopts (no schema in the adopt commit)
+    # the first DML adopts the dir and records its schema
     lake_delete(spark, lake, "k < 5", col_types={"k": "int"})
-    with pytest.raises(ValueError, match="record_schema"):
-        lake_drop_column(lake, "s")
-    v = lake_record_schema(spark, lake)
-    assert snapshot_info(lake, v).get("schema")
-    assert lake_record_schema(spark, lake) == v  # idempotent no-op
     lake_drop_column(lake, "s")
-    assert read_snapshot(spark, lake).columns == ["k", "v"]
+    cur = read_snapshot(spark, lake)
+    assert cur.columns == ["k", "v"] and cur.count() == 15
+
+
+def _stream_into(spark, tmp_path, lake):
+    from mlb_data_pipeline_spark.streaming.jobs import lake_snapshot_stream
+
+    src = str(tmp_path / "src")
+    _df(spark, 100, 110).coalesce(1).write.parquet(src)
+    rows = spark.readStream.schema(_df(spark, 0, 1).schema).parquet(src)
+    lake_snapshot_stream(rows, lake, str(tmp_path / "ckpt"))
+
+
+@pytest.mark.parametrize(
+    "first_commit", ["write_append", "dml_adopt", "stream_adopt", "stream_init"]
+)
+def test_first_commit_records_schema(spark, tmp_path, first_commit):
+    """Each way a lake gets its v1 records the table schema in it."""
+    lake = str(tmp_path / "lake")
+    if first_commit != "stream_init":
+        _df(spark, 0, 20).coalesce(1).write.parquet(lake)  # plain dir
+    else:
+        os.makedirs(lake)
+    if first_commit == "write_append":
+        lake_write(spark, _df(spark, 20, 30).coalesce(1), lake)
+    elif first_commit == "dml_adopt":
+        lake_delete(spark, lake, "k < 5", col_types={"k": "int"})
+    else:
+        _stream_into(spark, tmp_path, lake)
+    info = snapshot_info(lake, 1)
+    assert info.get("schema"), info["op"]
+    assert read_snapshot(spark, lake, 1).columns == ["k", "v", "s"]
+
+
+def test_record_without_schema_raises_on_read(spark, tmp_path):
+    """A record stripped of its schema is an error naming the version,
+    not a merge-read of whatever the files hold."""
+    import json
+
+    lake = str(tmp_path / "lake")
+    lake_write(spark, _df(spark, 0, 20).coalesce(1), lake)
+    lake_write(spark, _df(spark, 20, 30).coalesce(1), lake)  # v2
+    fn = os.path.join(lake, "_snapshots", f"v{2:012d}.json")
+    with open(fn) as f:
+        record = json.load(f)
+    del record["schema"]
+    with open(fn, "w") as f:
+        json.dump(record, f)
+    with pytest.raises(ValueError, match=r"v2 .*records no schema"):
+        read_snapshot(spark, lake)
+    assert read_snapshot(spark, lake, 1).count() == 20
+
+
+def test_first_commit_without_schema_raises(tmp_path):
+    lake = str(tmp_path / "lake")
+    os.makedirs(lake)
+    with pytest.raises(ValueError, match="schema"):
+        commit_snapshot(lake, [], "init", parent=0)
+    assert not os.listdir(lake)
 
 
 # ---------------------------------------------------------------------------

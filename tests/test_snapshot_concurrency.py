@@ -130,7 +130,9 @@ def test_optimize_commit_asserts_parent(spark, tmp_path, monkeypatch):
     df = _kv(spark, 0, 2000)
     specs = zorder_specs(df, ["k", "v"])
     write_zordered(df.filter("k % 10 != 0"), lake, specs, bits=8, n_files=4)
-    commit_snapshot(lake, S._data_files(lake), "adopt", parent=0)
+    commit_snapshot(
+        lake, S._data_files(lake), "adopt", parent=0, schema_json=df.schema.json()
+    )
     # unsorted wide-span append → dirty files for OPTIMIZE
     appended = lake_write(spark, _kv(spark, 0, 2000).filter("k % 10 = 0").coalesce(1), lake)
     assert appended["version"] == 2
@@ -295,7 +297,10 @@ def test_stream_first_batch_crash_retry_no_duplicates(spark, tmp_path):
 
     # simulate the crashed first attempt: init committed, batch files
     # written, commit never happened
-    commit_snapshot(lake, [], "stream_init", parent=0)
+    commit_snapshot(
+        lake, [], "stream_init", parent=0,
+        schema_json=spark.read.schema(schema).parquet(src_dir + "/b0").schema.json(),
+    )
     orphans = _write_new_files(spark.read.schema(schema).parquet(src_dir + "/b0"), lake, [])
     assert orphans
 
