@@ -10,6 +10,10 @@ driver. Prints exactly ONE JSON line:
 
     {"metric": "bench_total_sec", "value": N, "unit": "sec",
      "queries": {"q00_...": sec, ...}, "sf": 0.1}
+
+A query or section that raises reports ``null`` in its slot (never a
+number) and is left out of every total; the error texts go to ONE
+stderr JSON line, ``{"errors": {"<query or section>": "<error>"}}``.
 """
 
 from __future__ import annotations
@@ -46,6 +50,17 @@ def _sf_from_dir(sf_dir: str) -> float:
 def execute(df) -> None:
     """Run the full plan without collecting results to the driver."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def attempt(errors: dict[str, str], key: str, fn, failed=None):
+    """``fn()``, or ``failed`` with the error text kept under ``key``:
+    one bad query or section must not kill the run, nor pass for a
+    measurement."""
+    try:
+        return fn()
+    except Exception as exc:  # noqa: BLE001 — recorded in the errors line
+        errors[key] = f"{type(exc).__name__}: {exc}".replace("\n", " ")[:300]
+        return failed
 
 
 def release() -> None:
@@ -151,7 +166,7 @@ def pq_recall(spark, sf_dir: str = "/root/testdata/sf0.01") -> dict:
     }
 
 
-def sf1_section(spark) -> dict:
+def sf1_section(spark, errors: dict[str, str]) -> dict:
     """Spark vs DuckDB on the oracled bench queries at sf1 (10x the
     driver's largest scale factor, generated by tools/gen_sf1.py on
     demand). The sub-second sf0.1 walls are dominated by Spark's fixed
@@ -193,45 +208,42 @@ def sf1_section(spark) -> dict:
 
     names = sorted(n for n, q in REGISTRY.items() if q.bench and q.oracle)
     truncated = False
-    spark_t: dict[str, float] = {}
+    def min_of_two(run) -> float:
+        run()  # warm-up (untimed)
+        runs = []
+        for _ in range(2):
+            t0 = time.perf_counter()
+            run()
+            runs.append(time.perf_counter() - t0)
+        return round(min(runs), 4)
+
+    spark_t: dict[str, float | None] = {}
     for name in names:
         if over_budget():
             truncated = True
             break
-        try:
-            execute(REGISTRY[name].spark(spark, SF1_DIR))  # warm-up (untimed)
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                execute(REGISTRY[name].spark(spark, SF1_DIR))
-                runs.append(time.perf_counter() - t0)
-            spark_t[name] = round(min(runs), 4)
-        except Exception as exc:  # noqa: BLE001
-            print(f"bench sf1 (spark): {name} failed: {exc}", file=sys.stderr)
-            spark_t[name] = -1.0
+        spark_t[name] = attempt(
+            errors,
+            f"sf1.spark.{name}",
+            lambda: min_of_two(lambda: execute(REGISTRY[name].spark(spark, SF1_DIR))),
+        )
         release()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF1_DIR, t)}')")
-    duck_t: dict[str, float] = {}
+    duck_t: dict[str, float | None] = {}
     for name in names:
         if name not in spark_t or over_budget():
             truncated = True
             break
-        try:
-            con.execute(REGISTRY[name].oracle).fetchall()  # warm-up (untimed)
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                con.execute(REGISTRY[name].oracle).fetchall()
-                runs.append(time.perf_counter() - t0)
-            duck_t[name] = round(min(runs), 4)
-        except Exception as exc:  # noqa: BLE001
-            print(f"bench sf1 (duckdb): {name} failed: {exc}", file=sys.stderr)
-            duck_t[name] = -1.0
+        duck_t[name] = attempt(
+            errors,
+            f"sf1.duckdb.{name}",
+            lambda: min_of_two(lambda: con.execute(REGISTRY[name].oracle).fetchall()),
+        )
     # totals over the queries BOTH engines completed — a truncated or
     # failed side must not skew the ratio
-    common = [n for n in names if spark_t.get(n, -1) >= 0 and duck_t.get(n, -1) >= 0]
+    common = [n for n in names if spark_t.get(n) is not None and duck_t.get(n) is not None]
     s_tot = round(sum(spark_t[n] for n in common), 4)
     d_tot = round(sum(duck_t[n] for n in common), 4)
     out = {
@@ -256,42 +268,27 @@ def main() -> None:
     # contract is ONE clean JSON line, so raise the log threshold
     spark.sparkContext.setLogLevel("FATAL")
     names = sorted(name for name, q in REGISTRY.items() if q.bench)
-    timings: dict[str, float] = {}
-    for name in names:
+    errors: dict[str, str] = {}
+
+    def median_wall(name: str) -> float:
         q = REGISTRY[name]
-        try:
-            execute(q.spark(spark, SF_DIR))  # warm-up (untimed)
-            samples = []
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                execute(q.spark(spark, SF_DIR))
-                samples.append(time.perf_counter() - t0)
-            timings[name] = round(statistics.median(samples), 4)
-        except Exception as exc:  # noqa: BLE001 — one bad query must not kill the run
-            print(f"bench: {name} failed: {exc}", file=sys.stderr)
-            timings[name] = -1.0
+        execute(q.spark(spark, SF_DIR))  # warm-up (untimed)
+        samples = []
+        for _ in range(RUNS):
+            t0 = time.perf_counter()
+            execute(q.spark(spark, SF_DIR))
+            samples.append(time.perf_counter() - t0)
+        return round(statistics.median(samples), 4)
+
+    timings: dict[str, float | None] = {}
+    for name in names:
+        timings[name] = attempt(errors, name, lambda: median_wall(name))
         release()
-    total = round(sum(t for t in timings.values() if t >= 0), 4)
-    try:
-        recall = lsh_recall(spark)
-    except Exception as exc:  # noqa: BLE001 — recall is a metric, not a gate
-        print(f"bench: recall failed: {exc}", file=sys.stderr)
-        recall = -1.0
-    try:
-        recall_mp = lsh_recall(spark, probe_bits=1)
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: multiprobe recall failed: {exc}", file=sys.stderr)
-        recall_mp = -1.0
-    try:
-        recall_ivf = ivf_recall(spark)
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: ivf recall failed: {exc}", file=sys.stderr)
-        recall_ivf = -1.0
-    try:
-        recall_pq = pq_recall(spark)
-    except Exception as exc:  # noqa: BLE001
-        print(f"bench: pq recall failed: {exc}", file=sys.stderr)
-        recall_pq = {"adc": -1.0, "rerank": -1.0}
+    total = round(sum(t for t in timings.values() if t is not None), 4)
+    recall = attempt(errors, "recall", lambda: lsh_recall(spark))
+    recall_mp = attempt(errors, "recall_multiprobe", lambda: lsh_recall(spark, probe_bits=1))
+    recall_ivf = attempt(errors, "ivf_recall", lambda: ivf_recall(spark))
+    recall_pq = attempt(errors, "pq_recall", lambda: pq_recall(spark), {"adc": None, "rerank": None})
     out = {
         "metric": "bench_total_sec",
         "value": total,
@@ -304,10 +301,9 @@ def main() -> None:
         "sf": _sf_from_dir(SF_DIR),
     }
     if RUN_SF1:
-        try:
-            out["sf1"] = sf1_section(spark)
-        except Exception as exc:  # noqa: BLE001 — sf1 is a datapoint, not a gate
-            print(f"bench: sf1 section failed: {exc}", file=sys.stderr)
+        sf1 = attempt(errors, "sf1", lambda: sf1_section(spark, errors))
+        if sf1 is not None:
+            out["sf1"] = sf1
     # The driver's round record keeps only the LAST 2000 BYTES of stdout
     # (BENCH_r09 lost its whole sf0.1 section to the tail window), so the
     # headline JSON line must fit that budget. Bulk sections — the
@@ -315,14 +311,16 @@ def main() -> None:
     # to a SIDECAR stderr line instead of padding the line of record.
     scaling_path = os.path.join(_ROOT, "docs", "SCALING.json")
     if os.path.exists(scaling_path):
-        try:
+
+        def scaling_curve():
             with open(scaling_path) as f:
-                print(
-                    json.dumps({"scaling_curve_recorded": json.load(f)["curve"]}),
-                    file=sys.stderr,
-                )
-        except Exception as exc:  # noqa: BLE001
-            print(f"bench: scaling curve embed failed: {exc}", file=sys.stderr)
+                return json.load(f)["curve"]
+
+        curve = attempt(errors, "scaling_curve", scaling_curve)
+        if curve is not None:
+            print(json.dumps({"scaling_curve_recorded": curve}), file=sys.stderr)
+    if errors:
+        print(json.dumps({"errors": errors}), file=sys.stderr)
     line = json.dumps(out)
     # belt-and-braces: if the line ever outgrows the capture window, shed
     # the most verbose members to stderr until the record parses whole

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .relational import bloom_probe, bloom_size_bits, bloom_words
 
 _META_WIDX = -1  # sentinel row carrying (m, n_hashes) even when no bits are set
@@ -59,9 +60,7 @@ def build_bloom_store(
     n = expected_items if expected_items is not None else df.count()
     m = bloom_size_bits(n, fpp, max_bits)
     spark = df.sparkSession
-    meta = spark.createDataFrame(
-        [(_META_WIDX, 0)], "__w BIGINT, __word BIGINT"
-    )
+    meta = local_frame(spark, [(_META_WIDX, 0)], "__w BIGINT, __word BIGINT")
     words = bloom_words(df, on, m, n_hashes).unionByName(meta)
     words.withColumn("m", F.lit(m)).withColumn(
         "n_hashes", F.lit(n_hashes)

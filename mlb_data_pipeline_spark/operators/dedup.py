@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def dedup_exact(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
     """Deterministic exact dedup: keep the first row per key under an
@@ -341,7 +343,7 @@ def _cc_local(edges_rows, src_type) -> tuple:
     fixpoint the iterative operator converges to, computed in one pass.
     ``edges_rows`` is any iterable of (src, dst) pairs (plain tuples
     from an Arrow collect — no Row boxing). Returns (rows, schema) for
-    createDataFrame."""
+    ``local_frame``."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -422,12 +424,14 @@ def connected_components(
     compression yields component = min reachable id, the identical
     fixpoint — pinned against the iterative path in
     tests/test_dedup_ops.py. The collect goes through Arrow
-    (``toArrow`` — two flat columns, no Row boxing) and the returned
-    frame carries an explicit BROADCAST hint: its size is proved by the
-    tier's own gate (<= 2 x budget rows held on the driver), and
-    without the hint a downstream corpus join sees an unknown-size
-    ExistingRDD relation and writes a corpus-side shuffle for a
-    SortMergeJoin (the r14 q59 plan) that AQE can only partially undo.
+    (``toArrow`` — two flat columns, no Row boxing), the labels go
+    back as one Arrow batch (``local_frame``: a LocalRelation, no
+    Python worker), and the returned frame carries an explicit
+    BROADCAST hint: its size is proved by the tier's own gate (<= 2 x
+    budget rows held on the driver), so a downstream corpus join plans
+    a BroadcastHashJoin whatever the session's broadcast threshold,
+    never the corpus-side shuffle into a SortMergeJoin of the r14 q59
+    plan.
     """
     # lazy localCheckpoint on the NARROW pair projection: the
     # symmetrizing union references it twice, and without the
@@ -461,13 +465,11 @@ def connected_components(
             zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()),
             edges.schema["src"].dataType,
         )
-        out = pairs.sparkSession.createDataFrame(rows, schema)
+        out = local_frame(pairs.sparkSession, rows, schema)
         # size is proved by the gate (<= 2 x budget driver-held rows):
         # hint the broadcast so consumers joining the corpus against the
-        # labels get a BroadcastHashJoin statically instead of shuffling
-        # the corpus into a SortMergeJoin against an unknown-size
-        # ExistingRDD (guide §3.1 — estimates are wrong after collects;
-        # hint when the bound is known)
+        # labels get a BroadcastHashJoin statically (guide §3.1 — hint
+        # when the bound is known)
         return F.broadcast(out)
     # Iterative tier: dedup the edges first — duplicates would multiply
     # every round's neighbor-min join fan-out, and this tier runs
@@ -822,9 +824,8 @@ def build_span_store(
     spans.repartition(F.col("__h")).sortWithinPartitions("__h").write.mode(
         "overwrite"
     ).parquet(base + "/spans")
-    spark.createDataFrame(
-        [(id_col, span_tokens, winnow_w)],
-        "id_col STRING, span_tokens INT, winnow_w INT",
+    local_frame(
+        spark, [(id_col, span_tokens, winnow_w)], "id_col STRING, span_tokens INT, winnow_w INT"
     ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
 
 

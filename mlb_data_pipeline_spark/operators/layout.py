@@ -38,6 +38,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 # Exactness bound for the floor-div key path: every numerator
 # (clamped - lo) * (2^bits - 1) must stay below 2^53 so the double
@@ -424,7 +426,7 @@ def build_scan_manifest(spark: SparkSession, path: str, cols: list[str]) -> Data
     ``nulls`` (round 11) is the column's footer null count, NULL when
     the footer didn't say — the metadata-count fast path needs a
     provable zero before trusting an unopened file's row count."""
-    return spark.createDataFrame(_manifest_rows(file_stats(path, cols), cols), _MANIFEST_SCHEMA)
+    return local_frame(spark, _manifest_rows(file_stats(path, cols), cols), _MANIFEST_SCHEMA)
 
 
 def _manifest_rows(stats: list[dict], cols: list[str]) -> list[tuple]:
@@ -1413,7 +1415,7 @@ def append_scan_manifest(spark: SparkSession, path: str, cols: list[str], manife
     new_names = [n for n in _data_files(path) if n not in known]
     rows = _manifest_rows(file_stats(path, cols, new_names), cols)
     if rows:
-        spark.createDataFrame(rows, _MANIFEST_SCHEMA).coalesce(1).write.mode(
+        local_frame(spark, rows, _MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(manifest_path)
 
@@ -1474,10 +1476,10 @@ def save_bloom_manifest(
     # — otherwise a numeric-column probe could "prove" a present value
     # absent (a pruning false negative)
     dtype = lake.schema[col].dataType.simpleString()
-    spark.createDataFrame(
-        [(col, m, n_hashes, dtype)], "col STRING, m LONG, k INT, dtype STRING"
-    ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
-    spark.createDataFrame([(n,) for n in names], "file STRING").coalesce(1).write.mode(
+    local_frame(spark, [(col, m, n_hashes, dtype)], "col STRING, m LONG, k INT, dtype STRING").coalesce(
+        1
+    ).write.mode("overwrite").parquet(base + "/meta")
+    local_frame(spark, [(n,) for n in names], "file STRING").coalesce(1).write.mode(
         "overwrite"
     ).parquet(base + "/files")
 
@@ -1559,7 +1561,7 @@ def append_bloom_manifest(spark: SparkSession, path: str, manifest_path: str) ->
         ).alias("word")
     )
     words.write.mode("append").parquet(base + "/words")
-    spark.createDataFrame([(n,) for n in new_names], "file STRING").coalesce(1).write.mode(
+    local_frame(spark, [(n,) for n in new_names], "file STRING").coalesce(1).write.mode(
         "append"
     ).parquet(base + "/files")
 
@@ -1886,7 +1888,7 @@ def compact_scan_manifest(spark: SparkSession, path: str, manifest_path: str) ->
         return {"rows_before": rows_before, "rows_after": rows_before, "files_dropped": 0}
     # semi-join against the live listing, not an IN-list literal: a
     # 100k-file lake would otherwise inline 100k strings into the plan
-    live = spark.createDataFrame([(n,) for n in sorted(on_disk)], "file string")
+    live = local_frame(spark, [(n,) for n in sorted(on_disk)], "file string")
     kept = mf.join(F.broadcast(live), "file", "left_semi")
     staging = manifest_path.rstrip("/") + "__gc_tmp"
     kept.coalesce(1).write.mode("overwrite").parquet(staging)

@@ -130,23 +130,56 @@ def median_exact(df: DataFrame, group_cols: list[str], value_col: str, out_col: 
 
 
 def spread_for_cpu(df: DataFrame) -> DataFrame:
-    """Redistribute a degenerate-parallelism scan before CPU-bound narrow
-    transforms (shingling, per-token hashing, feature extraction).
+    """Redistribute a degenerate-parallelism input before CPU-bound narrow
+    transforms (shingling, per-token hashing, feature extraction): one
+    round-robin shuffle to ``defaultParallelism`` partitions when the
+    input would otherwise leave most cores idle.
 
-    Parquet can't split below row-group granularity, so a table written
-    as few large row groups caps map-side parallelism at the file-split
-    count no matter how many cores exist. When the scan's partition
-    count is well below the cluster default parallelism, one round-robin
-    shuffle of the raw rows unlocks every core for the expensive narrow
-    work that follows. At real scale this is a NO-OP — a 100 TB table
-    has orders of magnitude more splits than cores, so the guard fails
-    and no shuffle is added; it only fires in the degenerate small-input
-    case where the shuffle is cheap by construction.
+    Decided from the plan; nothing runs. Two shapes:
+
+    - No query stage (a scan, a cached or checkpointed frame, narrow
+      transforms over them): the partition count is fixed at plan time,
+      e.g. parquet splits (no finer than row groups), and
+      ``df.rdd.getNumPartitions()`` reads it without a job. Spread when
+      it is at most half the cores.
+    - An AQE plan (a shuffle, a broadcast or a subquery): the output
+      count exists only after AQE has run the stages and coalesced the
+      last shuffle, and ``Dataset.rdd`` would run them outside any SQL
+      execution — the real action then runs them again. AQE packs
+      coalesced partitions to at least ``minPartitionSize`` (its
+      advisory size when ``parallelismFirst`` is off), so an output
+      smaller than ``defaultParallelism`` of those comes out with fewer
+      partitions than cores. Spread when the optimized plan's
+      ``sizeInBytes`` estimate is below that, or when a leaf has no
+      statistics (an RDD-backed frame reports
+      ``spark.sql.defaultSizeInBytes``, which poisons every estimate
+      above it): a needless spread costs one round-robin shuffle of the
+      input, never more than the second full pass ``Dataset.rdd`` ran
+      to find out.
+
+    A large input passes through unchanged (many more splits, or
+    estimated bytes, than cores), so the shuffle lands where it is
+    cheap; only a plan over an RDD-backed leaf can pay it at scale.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * 2 <= target:
-        return df.repartition(target)
-    return df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        spread = df.rdd.getNumPartitions() * 2 <= target
+    else:
+        conf = spark._jsparkSession.sessionState().conf()
+        sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+        if conf.getConf(sql_conf.COALESCE_PARTITIONS_PARALLELISM_FIRST()):
+            floor = conf.getConf(sql_conf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
+        else:
+            floor = conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES())
+        plan = qe.optimizedPlan()
+        leaves = plan.collectLeaves()
+        unknown = conf.getConf(sql_conf.DEFAULT_SIZE_IN_BYTES())
+        spread = any(
+            int(str(leaves.apply(i).stats().sizeInBytes())) >= unknown for i in range(leaves.size())
+        ) or int(str(plan.stats().sizeInBytes())) < target * floor
+    return df.repartition(target) if spread else df
 
 
 def ordered_small(df: DataFrame, *cols: str) -> DataFrame:

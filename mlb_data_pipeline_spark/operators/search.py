@@ -52,6 +52,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 TOKEN_RE = "[a-z0-9]+"
 
 
@@ -151,9 +153,9 @@ def save_text_index(index: TextIndex, path: str) -> None:
         "batch"
     ).parquet(base + "/docs")
     _rewrite_stats(index.postings.sparkSession, base)
-    index.postings.sparkSession.createDataFrame(
-        [(index.id_col,)], "id_col STRING"
-    ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
+    local_frame(index.postings.sparkSession, [(index.id_col,)], "id_col STRING").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(base + "/meta")
 
 
 def _rewrite_stats(spark, base: str) -> None:
@@ -306,9 +308,7 @@ def bm25_scores(
         )
     spark = index.postings.sparkSession
     id_col = index.id_col
-    qt = spark.createDataFrame(
-        sorted(set(query_terms)), "query_id int, term string"
-    )
+    qt = local_frame(spark, sorted(set(query_terms)), "query_id int, term string")
     term_list = sorted({t for _, t in query_terms})
 
     # The probe: a literal IN-filter (not a join) so it pushes down

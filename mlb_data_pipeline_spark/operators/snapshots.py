@@ -146,6 +146,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .layout import (
     _all_data_files,
     _data_files,
@@ -1098,7 +1099,7 @@ def _read_record(
     if not files:
         # empty table: the record's schema, never on-disk leftovers
         # (vacuumed away, or a dead pre-evolution column set)
-        return spark.createDataFrame([], _record_schema(path, info))
+        return local_frame(spark, [], _record_schema(path, info))
     missing = [n for n in files if not os.path.exists(os.path.join(path, n))]
     if missing:
         raise ValueError(
@@ -2103,7 +2104,7 @@ def _read_changes_infos(
         dv_f = _dv_df(spark, path, info_from)
         dv_t = _dv_df(spark, path, info_to)
         if dv_f is not None or dv_t is not None:
-            empty = spark.createDataFrame([], "file string, pos long")
+            empty = local_frame(spark, [], "file string, pos long")
             dv_f = dv_f if dv_f is not None else empty
             dv_t = dv_t if dv_t is not None else empty
             new_pos = dv_t.join(dv_f, ["file", "pos"], "left_anti").filter(
@@ -2147,7 +2148,7 @@ def _read_changes_infos(
     cols = schema.names
     if not legs:
         # identical file sets, identical masks: nothing changed
-        return spark.createDataFrame([], schema).select(
+        return local_frame(spark, [], schema).select(
             *cols,
             F.lit("insert").alias("__change"),
             F.lit(0).cast("long").alias("__n"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector_math import cosine, norm
+from ..session import local_frame
 
 
 def _prefix(df: DataFrame, prefix: str) -> DataFrame:
@@ -615,12 +616,12 @@ def save_ivf_index(index: IvfIndex, path: str) -> None:
     prunes to n_probe/n_lists of the files)."""
     spark = index.assignments.sparkSession
     base = path.rstrip("/")
-    spark.createDataFrame(
-        [(i, list(c)) for i, c in enumerate(index.centroids)], "list_id INT, centroid ARRAY<DOUBLE>"
+    local_frame(
+        spark, [(i, list(c)) for i, c in enumerate(index.centroids)], "list_id INT, centroid ARRAY<DOUBLE>"
     ).coalesce(1).write.mode("overwrite").parquet(base + "/centroids")
-    spark.createDataFrame(
-        [(index.id_col, index.vec_col)], "id_col STRING, vec_col STRING"
-    ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
+    local_frame(spark, [(index.id_col, index.vec_col)], "id_col STRING, vec_col STRING").coalesce(
+        1
+    ).write.mode("overwrite").parquet(base + "/meta")
     index.assignments.write.mode("overwrite").partitionBy("__list").parquet(base + "/assignments")
 
 
@@ -816,9 +817,9 @@ def save_pq_codebooks(spark, codebooks, path: str) -> None:
         for mi, book in enumerate(codebooks)
         for ci, cent in enumerate(book)
     ]
-    spark.createDataFrame(
-        rows, "subspace INT, code INT, centroid ARRAY<DOUBLE>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    local_frame(spark, rows, "subspace INT, code INT, centroid ARRAY<DOUBLE>").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def load_pq_codebooks(spark, path: str) -> list[list[list[float]]]:
@@ -1801,7 +1802,7 @@ def save_sq8_index(corpus: DataFrame, id_col: str, vec_col: str, dim: int, path:
     base = path.rstrip("/")
     b = sq8_bounds(corpus, vec_col, dim)
     b.coalesce(1).write.mode("overwrite").parquet(base + "/bounds")
-    spark.createDataFrame([(id_col, vec_col, dim)], "id_col STRING, vec_col STRING, dim INT").coalesce(
+    local_frame(spark, [(id_col, vec_col, dim)], "id_col STRING, vec_col STRING, dim INT").coalesce(
         1
     ).write.mode("overwrite").parquet(base + "/meta")
     bounds = spark.read.parquet(base + "/bounds")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textfn import extract_field
 from ..operators.enrich import MockLLMClient, llm_enrich
+from ..session import local_frame
 
 SPECIALIZED_AGENTS = ("news", "game_analysis", "fan_reaction")
 
@@ -36,7 +37,8 @@ def create_plan(spark: SparkSession, topic: str, focus: str, client_factory=Mock
     parse :201-248). The mock completion is deterministic, so the parse
     path is exercised on stable input: we parse the PROMPT echo, which
     carries the structured fields."""
-    seed = spark.createDataFrame(
+    seed = local_frame(
+        spark,
         [(f"Topic: {topic}\nFocus: {focus}\nAgents: {','.join(SPECIALIZED_AGENTS)}\nSections: intro,body,outro",)],
         "prompt STRING",
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from ..session import local_frame
 from ..sources.feeds import rest_json_source, scrape_articles
 from ..sources.readers import parse_schedule_payloads, read_csv, read_json
 from ..sources.writers import delete_by_predicate, upsert_by_key, write_json_single, write_partitioned
@@ -390,7 +391,7 @@ def q78_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     good = docs.select(
         F.to_json(F.struct("doc_id", "source", "n_chars")).alias("value")
     )
-    bad = spark.createDataFrame([(s,) for s in _Q78_CORRUPT], "value string")
+    bad = local_frame(spark, [(s,) for s in _Q78_CORRUPT], "value string")
     good.unionByName(bad).coalesce(1).write.mode("overwrite").text(path)
 
     schema = T.StructType(

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.layout import hilbert_key_sql, scale_to_bits_cols, zorder_key, zorder_key_sql
+from ..session import local_frame
 from .registry import query
 
 _BITS = 8  # 8 bits/dim x 2 dims = 16-bit key; buckets = z >> 10 (64 cells)
@@ -364,7 +365,7 @@ def q23_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "box",
     )
     n = lake_count(spark, "q23_orders_lake", "ck BETWEEN 50 AND 600 AND pc >= 5000000")
-    count = spark.createDataFrame([("count", n, None, None, None)], schema)
+    count = local_frame(spark, [("count", n, None, None, None)], schema)
     date = agg(
         lake_scan(
             spark, "q23_orders_by_date",
@@ -614,7 +615,7 @@ def q45_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interval-probe form)
     from ..catalog import lake_join_scan
 
-    dim = spark.createDataFrame([("src1",), ("src4",)], "dk string")
+    dim = local_frame(spark, [("src1",), ("src4",)], "dk string")
     join = agg(lake_join_scan(spark, "q45_docs_lake", dim, "source", "dk"), "join")
     return join.unionByName(point).orderBy("part")
 
@@ -746,7 +747,7 @@ def r68_lake_partition_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = lake_count(spark, "r68_orders_by_month", "om BETWEEN 2 AND 4")
     n_in = lake_count(spark, "r68_orders_by_month", "om IN (1, 6, 12)")
-    count = spark.createDataFrame([("count", n, None, None), ("inlist", n_in, None, None)], schema)
+    count = local_frame(spark, [("count", n, None, None), ("inlist", n_in, None, None)], schema)
     minmax = lake_min_max(spark, "r68_orders_by_month", "pc", "ck BETWEEN 50 AND 600").select(
         F.lit("minmax").alias("part"),
         F.lit(None).cast("long").alias("n"),
@@ -1074,7 +1075,7 @@ def r73_lake_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ]
-    return spark.createDataFrame(rows, "part string, ndv long").orderBy("part")
+    return local_frame(spark, rows, "part string, ndv long").orderBy("part")
 
 
 # ---------------------------------------------------------------------------

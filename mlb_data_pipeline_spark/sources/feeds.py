@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 Fetcher = Callable[[str], str]
 
 
@@ -38,7 +40,7 @@ def rest_json_source(spark: SparkSession, urls: list[str], fetcher: Fetcher) -> 
     fetches one schedule per day) and parallelize the raw payloads; all
     parsing happens distributed (readers.parse_schedule_payloads)."""
     rows = [(u, fetcher(u)) for u in urls]
-    return spark.createDataFrame(rows, "url STRING, payload STRING")
+    return local_frame(spark, rows, "url STRING, payload STRING")
 
 
 # ------------------------------------------------------------------ S5: RSS
@@ -57,7 +59,7 @@ def rss_source(spark: SparkSession, feed_urls: list[str], fetcher: Fetcher) -> D
     driver-side per feed; item extraction is distributed over the
     payload column via mapInPandas (one feed document can carry
     thousands of items)."""
-    raw = spark.createDataFrame([(u, fetcher(u)) for u in feed_urls], "feed_url STRING, xml STRING")
+    raw = local_frame(spark, [(u, fetcher(u)) for u in feed_urls], "feed_url STRING, xml STRING")
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def write_partitioned(
     df: DataFrame,
@@ -381,13 +383,13 @@ def shard_manifest(spark: SparkSession, data_path: str) -> DataFrame:
         # an empty release (every doc filtered/deduped) is a legitimate
         # outcome — the manifest certifies the empty file set instead of
         # failing schema inference on a fileless directory
-        return spark.createDataFrame([], "file STRING, n_rows BIGINT, bytes BIGINT")
+        return local_frame(spark, [], "file STRING, n_rows BIGINT, bytes BIGINT")
     counts = (
         spark.read.parquet(data_path.rstrip("/"))
         .groupBy(norm(F.input_file_name()).alias("path"))
         .agg(F.count("*").alias("n_rows"))
     )
-    size_df = spark.createDataFrame(sizes, "file STRING, bytes BIGINT").withColumn(
+    size_df = local_frame(spark, sizes, "file STRING, bytes BIGINT").withColumn(
         "path", norm(F.col("file"))
     )
     # LEFT join FROM the filesystem listing: a zero-row data file has no

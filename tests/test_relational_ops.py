@@ -481,3 +481,53 @@ def test_interval_overlap_join_salted_matches_and_levels_hot_cell(spark):
         .collect()[0][0]
     )
     assert salted_load < 600 / 2  # well under the unsalted hot-cell load
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("source", ["parquet", "driver_rows"])
+def test_spread_for_cpu_runs_no_job_on_a_shuffle_and_broadcast_plan(spark, tmp_path, source):
+    # Dataset.rdd on an AQE plan runs its shuffle and broadcast stages
+    # outside any SQL execution (and the real action later runs them
+    # again); the decision must come from the plan alone
+    from mlb_data_pipeline_spark.operators.relational import spread_for_cpu
+
+    rows = [(i, i % 7) for i in range(5000)]
+    if source == "parquet":
+        path = str(tmp_path / "t")
+        spark.createDataFrame(rows, "id long, k long").write.parquet(path)
+        base = spark.read.parquet(path)
+    else:  # RDD-backed: no size estimate at all
+        base = spark.createDataFrame(rows, "id long, k long")
+    dim = spark.range(0, 7).withColumnRenamed("id", "k")
+    df = base.groupBy("k").count().join(F.broadcast(dim), "k")
+    assert "AdaptiveSparkPlan" in df._jdf.queryExecution().executedPlan().toString()
+    out, jobs = _jobs_in_group(spark, f"spread_probe_{source}", lambda: spread_for_cpu(df))
+    assert jobs == 0
+    # a few KB of post-shuffle output: AQE would coalesce it below the
+    # core count, so the spread fires, as the old probe's count did
+    assert out is not df
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_spread_for_cpu_keeps_the_plan_only_count_without_stages(spark, tmp_path):
+    from mlb_data_pipeline_spark.operators.relational import spread_for_cpu
+
+    path = str(tmp_path / "t")
+    target = spark.sparkContext.defaultParallelism
+    spark.range(0, 1000, 1, 1).write.parquet(path)
+    few = spark.read.parquet(path)
+    out, jobs = _jobs_in_group(spark, "spread_probe_scan", lambda: spread_for_cpu(few))
+    assert jobs == 0
+    assert out is not few and out.rdd.getNumPartitions() == target
+    many = spark.range(0, 1000, 1, 2 * target)
+    assert spread_for_cpu(many) is many
